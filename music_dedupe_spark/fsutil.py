@@ -1,13 +1,13 @@
 """Hadoop-FileSystem helpers for checkpoint/store bookkeeping.
 
 Every path that a 100 TB deployment would put on ``hdfs://`` / ``s3a://``
-(CC iteration snapshots, signature stores, metrics sidecars, catalog
-manifests) must be probed/listed/deleted through the Hadoop FileSystem
-of the path's OWN scheme — driver-local ``os.path`` silently reports
-"absent" for remote URIs, which turns resume into restart-from-scratch
-and retention into a no-op exactly at the scale those features exist
-for. These wrappers go through the JVM ``FileSystem`` API, so they work
-identically for bare local paths, ``file://`` URIs, and remote stores.
+(CC iteration snapshots, signature stores, metrics sidecars) must be
+probed/listed/deleted through the Hadoop FileSystem of the path's OWN
+scheme — driver-local ``os.path`` silently reports "absent" for remote
+URIs, which turns resume into restart-from-scratch and retention into a
+no-op exactly at the scale those features exist for. These wrappers go
+through the JVM ``FileSystem`` API, so they work identically for bare
+local paths, ``file://`` URIs, and remote stores.
 """
 
 from __future__ import annotations
@@ -67,11 +67,6 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
         if jexc is not None and "FileNotFoundException" in jexc.getClass().getName():
             return False
         raise
-
-
-def mkdirs(spark: SparkSession, path: str) -> None:
-    fs, hpath, _ = _fs(spark, path)
-    fs.mkdirs(hpath)
 
 
 def read_text(spark: SparkSession, path: str) -> str:

@@ -1,29 +1,45 @@
 """Candidate generation: multi-channel blocking (SURVEY §2.3 J1/J2 + §7 Stage 3).
 
-Three channels, unioned (SURVEY §2.7) and deduplicated:
+One primitive, ``block_pairs``, turns a ``(_bk, file_id)`` frame into
+candidate pairs. A block is the set of rows sharing ``_bk``:
 
-1. ``exact_key_pairs``  — J2: self-equi-join on the exact normalized
-   blocking key. Hot keys (``main``, ``utils``, ``LICENSE`` …) explode
-   quadratically at 10^12 rows, so blocks above ``cap`` are *split* into
-   deterministic sub-blocks (salting by hash of the row id) and pairs
-   are generated only within a sub-block, plus a linear star over the
-   whole block to preserve connectivity for true duplicate clusters.
-   This bounds pair count per block at O(cap * size) instead of
-   O(size^2) — the north rule's "block-size capping".
-2. ``content_sha_star`` — exact-duplicate channel: identical content is
-   linked by a star to the minimum row id per sha256, O(n) per block
-   regardless of block size (no pair explosion on e.g. empty files).
+- a block of at most ``cap`` rows emits all its pairs;
+- a block over ``cap`` rows (the hot keys: ``main``, ``LICENSE``, the
+  empty file) emits a linear star to its minimum ``file_id``, which
+  keeps a true duplicate cluster connected at O(size) edges, and, when
+  ``salted``, all pairs within ``ceil(size / cap)`` hash sub-blocks of
+  about ``cap`` rows each. Pair count per block is O(cap * size)
+  instead of O(size^2): the north rule's "block-size capping".
+
+Block size and star root come from ONE ``groupBy`` + join, never a
+window: a window partition is one task that AQE cannot split, so a
+10^8-row hot key would be a straggler holding the whole block. The
+groupBy absorbs the hot key map-side (partial aggregation), and the
+join back is AQE-manageable (broadcast when the count side is small,
+skew-split sort-merge when it is not). Singleton blocks are dropped on
+the count side before the join, so they never shuffle twice.
+
+The channels are thin callers of that primitive:
+
+1. ``content_sha_star``  — exact duplicates: ``_bk = content_sha256``,
+   cap 1, so every multi-row block is a star (no pair explosion on
+   empty files or vendored licenses).
+2. ``exact_key_pairs``   — J2: ``_bk`` = the exact normalized blocking
+   key, capped and salted. The salt is ``pmod(xxhash64(file_id),
+   n_sub)``: deterministic, uniform, independent of row order.
 3. ``minhash_lsh_pairs`` — recall channel for near-duplicates whose
    keys differ (reference's fuzzy > 85 tolerance, core.py:695-697):
    character-shingle MinHash signatures (numpy, Arrow-batched), banded;
-   a band-key equality join proposes pairs.
+   ``_bk`` = band key, capped at ``band_cap``, star only.
 
 All channels emit ``(left_id, right_id, channel)`` with
-``left_id < right_id`` and no self-pairs.
+``left_id < right_id`` and no self-pairs; ``union_channels`` merges
+them with one dedup on the pair key.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -34,34 +50,43 @@ from pyspark.sql import functions as F
 MERSENNE_PRIME = (1 << 61) - 1
 
 
-def _attach_block_size(keyed: DataFrame, key_col: str = "_bk") -> DataFrame:
-    """Attach per-key block size as ``_bs`` and drop singleton blocks.
-
-    groupBy + join, NOT a window: a window partition is one task and
-    cannot be split by AQE, so one 10^8-row hot key ("main", the empty
-    file) becomes a straggler holding every row of the block. The
-    groupBy absorbs the hot key map-side (partial aggregation), and the
-    join back is AQE-manageable — broadcast when the count side is small,
-    skew-split sort-merge when it isn't. Size filter happens on the
-    count side BEFORE the join, so singleton keys never shuffle twice.
-    """
-    counts = (
-        keyed.groupBy(key_col)
-        .agg(F.count("*").alias("_bs"))
-        .filter(F.col("_bs") > 1)
-    )
-    return keyed.join(counts, key_col)
-
-
-def _pairs_within(blocks: DataFrame, key_cols: list[str], channel: str) -> DataFrame:
+def _pairs_within(blocks: DataFrame, key_cols: list[str]) -> DataFrame:
     l = blocks.select(*key_cols, F.col("file_id").alias("left_id"))
     r = blocks.select(*key_cols, F.col("file_id").alias("right_id"))
     return (
         l.join(r, key_cols)
         .filter(F.col("left_id") < F.col("right_id"))
         .select("left_id", "right_id")
-        .withColumn("channel", F.lit(channel))
     )
+
+
+def block_pairs(
+    keyed: DataFrame, cap: int, channel: str, salted: bool = False
+) -> DataFrame:
+    """Candidate pairs of a ``(_bk, file_id)`` frame (module docstring):
+    all pairs in blocks of size <= ``cap``; over ``cap``, a star to the
+    block minimum plus, when ``salted``, all pairs within
+    ``ceil(size / cap)`` hash sub-blocks. Null keys form no block."""
+    blocks = (
+        keyed.groupBy("_bk")
+        .agg(F.count("*").alias("_bs"), F.min("file_id").alias("_root"))
+        .filter(F.col("_bs") > 1)
+    )
+    keyed = keyed.join(blocks, "_bk")
+    big = keyed.filter(F.col("_bs") > cap)
+    parts = []
+    if cap > 1:  # at cap 1 every block left (size > 1) is over the cap
+        parts.append(_pairs_within(keyed.filter(F.col("_bs") <= cap), ["_bk"]))
+    if salted:
+        salt = F.pmod(F.xxhash64("file_id"), F.ceil(F.col("_bs") / cap).cast("int"))
+        parts.append(_pairs_within(big.withColumn("_salt", salt), ["_bk", "_salt"]))
+    parts.append(
+        big.filter(F.col("file_id") != F.col("_root")).select(
+            F.least("file_id", "_root").alias("left_id"),
+            F.greatest("file_id", "_root").alias("right_id"),
+        )
+    )
+    return reduce(DataFrame.unionByName, parts).withColumn("channel", F.lit(channel))
 
 
 def exact_key_pairs(
@@ -70,52 +95,21 @@ def exact_key_pairs(
     cap: int = 64,
     channel: str = "exact_key",
 ) -> DataFrame:
-    """Self-join on the exact blocking key with block-size capping.
-
-    Blocks <= cap: all pairs. Blocks > cap: pairs within hash-salted
-    sub-blocks of ~cap rows + a star to the block minimum (connectivity).
-    The salt is ``pmod(xxhash64(file_id), n_sub)`` — deterministic,
-    uniform, independent of row order.
-    """
+    """Self-join on the exact blocking key, capped and salted at ``cap``
+    (``block_pairs``). Null and empty keys block nothing."""
     keyed = df.select(F.col(key_col).alias("_bk"), "file_id").filter(
         F.col(key_col).isNotNull() & (F.col(key_col) != "")
     )
-    keyed = _attach_block_size(keyed)
-
-    small = keyed.filter(F.col("_bs") <= cap)
-    small_pairs = _pairs_within(small, ["_bk"], channel)
-
-    big = keyed.filter(F.col("_bs") > cap).withColumn(
-        "_salt", F.pmod(F.xxhash64("file_id"), F.ceil(F.col("_bs") / cap).cast("int"))
-    )
-    big_pairs = _pairs_within(big, ["_bk", "_salt"], channel)
-    big_star = (
-        big.join(big.groupBy("_bk").agg(F.min("file_id").alias("_root")), "_bk")
-        .filter(F.col("file_id") != F.col("_root"))
-        .select(
-            F.least("file_id", "_root").alias("left_id"),
-            F.greatest("file_id", "_root").alias("right_id"),
-        )
-        .withColumn("channel", F.lit(channel))
-    )
-    return small_pairs.unionByName(big_pairs).unionByName(big_star)
+    return block_pairs(keyed, cap, channel, salted=True)
 
 
 def content_sha_star(df: DataFrame, channel: str = "exact_content") -> DataFrame:
     """Exact-duplicate channel: link every row to the min row id of its
-    content_sha256 group. Linear in block size — hot exact-dup blocks
-    (empty files, vendored licenses) never pair-explode."""
-    roots = df.groupBy("content_sha256").agg(F.min("file_id").alias("_root"))
-    return (
-        df.select("content_sha256", "file_id")
-        .join(roots, "content_sha256")
-        .filter(F.col("file_id") != F.col("_root"))
-        .select(
-            F.least("file_id", "_root").alias("left_id"),
-            F.greatest("file_id", "_root").alias("right_id"),
-        )
-        .withColumn("channel", F.lit(channel))
-    )
+    content_sha256 group (``block_pairs`` at cap 1). Linear in block
+    size — hot exact-dup blocks (empty files, vendored licenses) never
+    pair-explode."""
+    keyed = df.select(F.col("content_sha256").alias("_bk"), "file_id")
+    return block_pairs(keyed, 1, channel)
 
 
 # ---------------------------------------------------------------------------
@@ -236,7 +230,7 @@ def minhash_lsh_pairs(
     = 0.42 Jaccard — generous recall; precision comes from the scorer.
 
     Buckets above ``band_cap`` are star-linked instead of pair-exploded
-    (same skew bound as exact_key_pairs).
+    (``block_pairs``, unsalted).
 
     ``sigs``: optional precomputed ``(file_id, sig)`` signatures (e.g.
     run_pipeline's signature store, or incremental_link's store-hit ∪
@@ -259,32 +253,18 @@ def minhash_lsh_pairs(
         "file_id",
         F.concat_ws("_", F.col("band_idx"), F.hash(F.col("band_sig"))).alias("_bk"),
     )
-    # the count+join in _attach_block_size consumes `banded` twice, and
-    # its lineage contains the EXPENSIVE minhash mapInPandas — without a
-    # persist the signatures are computed once per branch (measured
-    # +40% on the whole query). MEMORY_AND_DISK: at 10^12 rows this is
-    # n*bands small rows and spills gracefully; production checkpoints
-    # the candidate stage right after anyway (pipeline.run_pipeline).
+    # block_pairs reads `banded` once per branch (block count, all-pairs,
+    # star), and its lineage contains the EXPENSIVE minhash mapInPandas —
+    # without a persist the signatures are computed once per branch
+    # (measured +40% on the whole query). MEMORY_AND_DISK: at 10^12 rows
+    # this is n*bands small rows and spills gracefully; production
+    # checkpoints the candidate stage right after anyway
+    # (pipeline.run_pipeline).
     from pyspark import StorageLevel
 
-    # keep the PERSISTED handle separate: _attach_block_size reassigns to
-    # the post-join DataFrame, and unpersist() on that is a silent no-op —
-    # the cached signatures would pin executor memory for the session.
     cached = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    banded = _attach_block_size(cached)
-
-    small_pairs = _pairs_within(banded.filter(F.col("_bs") <= band_cap), ["_bk"], channel)
-    big = banded.filter(F.col("_bs") > band_cap)
-    big_star = (
-        big.join(big.groupBy("_bk").agg(F.min("file_id").alias("_root")), "_bk")
-        .filter(F.col("file_id") != F.col("_root"))
-        .select(
-            F.least("file_id", "_root").alias("left_id"),
-            F.greatest("file_id", "_root").alias("right_id"),
-        )
-        .withColumn("channel", F.lit(channel))
-    )
-    out = small_pairs.unionByName(big_star).dropDuplicates(["left_id", "right_id"])
+    # a pair sharing several bands is proposed once per band
+    out = block_pairs(cached, band_cap, channel).dropDuplicates(["left_id", "right_id"])
     # expose the persisted dependency so callers can unpersist once
     # their downstream result is materialized (run_pipeline does) —
     # otherwise the cached signatures pin executor memory for the

@@ -8,6 +8,7 @@ covered by unit tests against brute-force Python.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor, wait
 from typing import Iterator
 
 import numpy as np
@@ -217,6 +218,10 @@ LSH_CANARY_COUNT = 250
 LSH_ORGANIC_TRUTH_MAX_CHARS = 500_000
 #: Canary id marker: sorts after every stringified non-negative long.
 CANARY_PREFIX = "~"
+#: The one driver thread every canary pass runs on. A pool per call
+#: would start a new Python thread per call, and in PySpark's
+#: pinned-thread mode each one leaves its paired JVM thread behind.
+_CANARY_POOL = ThreadPoolExecutor(max_workers=1, thread_name_prefix="lsh-canary")
 
 
 def _lsh_canaries(d: DataFrame) -> tuple[DataFrame, list[int], int, int]:
@@ -316,10 +321,13 @@ def dedup_minhash_lsh(spark, sf):
     through driver pickle before the driver asks for it. The SCALE
     surface is ``blocking.minhash_lsh_pairs``, which stays fully
     distributed; this entry is its self-asserting demo at driver
-    corpus sizes."""
-    d = _t(spark, sf, "documents")
-    from concurrent.futures import ThreadPoolExecutor
+    corpus sizes.
 
+    Caveat: a ``localCheckpoint`` lives in executor storage, not on a
+    reliable store, so the returned frame's blocks are lost if an
+    executor dies and it cannot be recomputed from lineage; a caller on
+    a cluster that must survive executor loss should write it out."""
+    d = _t(spark, sf, "documents")
     from music_dedupe_spark.operators.blocking import minhash_lsh_pairs
 
     canary_input, planted, n_docs, total_chars = _lsh_canaries(d)
@@ -365,7 +373,7 @@ def dedup_minhash_lsh(spark, sf):
 
     # the REAL pass: the actual corpus only — canaries never touch it.
     # The canary check is an INDEPENDENT job chain over a ~500-row local
-    # frame: submit it from a second driver thread so its fixed
+    # frame: submit it to the canary thread so its fixed
     # stage-scheduling cost overlaps the real pass instead of being paid
     # serially before it (guide §2.6 — actions are only sequential
     # because the driver calls them sequentially; the two passes share
@@ -393,8 +401,7 @@ def dedup_minhash_lsh(spark, sf):
     # unpersist in a finally: the recall raise (or a failed collect)
     # must not strand MEMORY_AND_DISK signature caches in a long-lived
     # session — the exact leak the canary branch already guards against
-    pool = ThreadPoolExecutor(max_workers=1)
-    canary_future = pool.submit(_canary_check) if planted else None
+    canary_future = _CANARY_POOL.submit(_canary_check) if planted else None
     try:
         # canonicalize to NUMERIC (left < right) pair order JVM-side and
         # materialize ONCE with an eager localCheckpoint (round 6; the
@@ -444,8 +451,9 @@ def dedup_minhash_lsh(spark, sf):
     finally:
         # wait for the canary thread before unpersisting anything: its
         # error (if any) was surfaced by result() above; on an earlier
-        # raise the shutdown just drains the already-submitted check
-        pool.shutdown(wait=True)
+        # raise this just drains the already-submitted check
+        if canary_future is not None:
+            wait([canary_future])
         for dep in pair_deps + truth_deps:
             dep.unpersist()
     return out

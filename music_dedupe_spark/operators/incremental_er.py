@@ -99,23 +99,13 @@ def _delta_exact_key_pairs(
 
 def _delta_content_star(new_feats: DataFrame, all_feats: DataFrame) -> DataFrame:
     """content-sha channel: link each new file to the minimum file_id of
-    its sha group across the WHOLE corpus (one groupBy on the pruned
-    sha set, linear)."""
+    its sha group across the WHOLE corpus — the batch channel over the
+    sha groups pruned (broadcast semi-join) to those containing a new
+    file. Old→root links inside a touched group duplicate closure the
+    existing assignment already has, so only new-touching edges stay."""
     new_shas = new_feats.select("content_sha256").distinct()
-    grp = (
-        all_feats.select("content_sha256", "file_id")
-        .join(F.broadcast(new_shas), "content_sha256", "left_semi")
-    )
-    roots = grp.groupBy("content_sha256").agg(F.min("file_id").alias("_root"))
-    return (
-        grp.join(roots, "content_sha256")
-        .filter(F.col("file_id") != F.col("_root"))
-        .select(
-            F.least("file_id", "_root").alias("left_id"),
-            F.greatest("file_id", "_root").alias("right_id"),
-        )
-        .withColumn("channel", F.lit("exact_content"))
-    )
+    pruned = all_feats.join(F.broadcast(new_shas), "content_sha256", "left_semi")
+    return _touching_new(blocking.content_sha_star(pruned), new_feats)
 
 
 def _not_same_entity(pairs: DataFrame, assignment: DataFrame) -> DataFrame:
@@ -197,9 +187,7 @@ def incremental_link(
     pv_all = pair_view(all_feats)
 
     channels = [
-        # old→root links inside a touched sha group duplicate closure the
-        # existing assignment already has — keep the delta pure
-        _touching_new(_delta_content_star(pv_new, pv_all), pv_new),
+        _delta_content_star(pv_new, pv_all),
         _delta_exact_key_pairs(pv_new, pv_all, cap=cfg.block_cap),
     ]
 

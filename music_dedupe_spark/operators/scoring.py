@@ -51,8 +51,8 @@ class ScoringConfig:
 
 #: Hex chars of the sha256 prefix the pair joins carry for the
 #: exact_content equality (16 hex = 8 bytes; see the collision math at
-#: the use site). Module-level so BENCH/ab_sha_probe.py can reproduce
-#: the 16-byte round-4 baseline it was measured against.
+#: the use site); 8 bytes measured no slower than 16 through the pair
+#: joins (BENCH/ab_sha_r05.json).
 SHA_PREFIX_HEX_CHARS = 16
 
 NARROW_COLS = ("file_id", "norm_name", "content_sha256")

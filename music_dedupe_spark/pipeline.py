@@ -2,9 +2,9 @@
 → survivorship (SURVEY §3 EP1-EP3 re-expressed, §7 Stage 1).
 
 Every stage returns a DataFrame; ``run_pipeline`` wires them and
-optionally checkpoints each stage to parquet (the Iceberg-snapshot
-analog of the reference's per-100-row SQLite commits, core.py:655-663;
-see sources/catalog.py for the snapshot-commit table format).
+optionally checkpoints each stage to parquet (the analog of the
+reference's per-100-row SQLite commits, core.py:655-663; each stage is
+a plain overwrite write).
 
 Two id spaces (round-4 scaling change): the PUBLIC ``file_id`` (128-bit
 hex string) identifies rows in every returned stage output, while the

@@ -997,6 +997,7 @@ def _deterministic_edges(spark, sf) -> DataFrame:
     0.4 with dedup_ngram_jaccard's DF cut — materialized eagerly
     (localCheckpoint) with the shingle cache released. (left_id,
     right_id) over doc_id longs."""
+    from music_dedupe_spark.operators import blocking
     from music_dedupe_spark.operators.dedup import ngram_jaccard_pairs
 
     d = _t(spark, sf, "documents")
@@ -1004,16 +1005,11 @@ def _deterministic_edges(spark, sf) -> DataFrame:
     jac_edges = jac_pairs.select(
         F.col("left_doc").alias("left_id"), F.col("right_doc").alias("right_id")
     )
-    roots = d.groupBy(F.sha2("text", 256).alias("fp")).agg(F.min("doc_id").alias("root"))
-    content_edges = (
-        d.select(F.sha2("text", 256).alias("fp"), "doc_id")
-        .join(roots, "fp")
-        .filter(F.col("doc_id") != F.col("root"))
-        .select(
-            F.least("doc_id", "root").alias("left_id"),
-            F.greatest("doc_id", "root").alias("right_id"),
+    content_edges = blocking.content_sha_star(
+        d.select(
+            F.sha2("text", 256).alias("content_sha256"), F.col("doc_id").alias("file_id")
         )
-    )
+    ).select("left_id", "right_id")
     # materialize the (tiny) edge list eagerly, then release the ~10x-text
     # shingle cache ngram_jaccard_pairs persisted — the CC loop and the
     # caller's collect would otherwise keep re-reading (and the lineage

@@ -10,11 +10,24 @@ north rule requires to be explicit.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
+#: Share of the host's MemTotal given to the driver heap (in local mode
+#: the driver JVM is the only JVM). The JVM's resident size runs a few GB
+#: above its heap, and the Python workers need room beside it.
+DRIVER_HEAP_SHARE = 0.4
+
+
+def _host_driver_mem() -> str:
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, int(mem_kb * DRIVER_HEAP_SHARE / 1024 / 1024))}g"
+
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -31,6 +44,7 @@ def get_spark(
     """
     cpus = str(cpus or DEFAULT_CPUS)
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -50,12 +64,8 @@ def get_spark(
         # shuffle/spill codec (round-6 A/B, BENCH/ab_conf_r06.json):
         # zstd trades a little CPU for a markedly better ratio — fewer
         # shuffle bytes is what a bandwidth-bound cluster pays for, and
-        # it measured neutral-to-positive locally. Env-overridable for
-        # probes (SPARK_GRAFT_IO_CODEC=lz4 restores the old default).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),
-        )
+        # it measured neutral-to-positive locally.
+        .config("spark.io.compression.codec", "zstd")
         # let the planner pick shuffled-hash join where its size checks
         # pass instead of defaulting to sort-merge (no sort pass; the
         # blocking layer caps partition-level build sides, and AQE's
@@ -70,10 +80,13 @@ def get_spark(
         # deterministic timestamps vs the DuckDB oracle
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # sized to the host (SPARK_GRAFT_DRIVER_MEM overrides): a fixed
+        # heap larger than the machine gets the driver OOM-killed
+        .config("spark.driver.memory", driver_mem)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    print(f"music_dedupe_spark: local[{cpus}], driver heap {driver_mem}", file=sys.stderr)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)

@@ -109,3 +109,50 @@ def test_minhash_signature_deterministic(spark):
     s1 = blocking.minhash_signatures(df).collect()[0]["sig"]
     s2 = blocking.minhash_signatures(df).collect()[0]["sig"]
     assert s1 == s2 and len(s1) == 128
+
+
+def _block_pairs_oracle(blocks: dict, cap: int, salted: bool, n_sub) -> set:
+    """Brute-force block_pairs: all pairs up to ``cap``; over it, the star
+    to the block minimum plus, when ``salted``, all pairs sharing a
+    sub-block (``n_sub`` maps an id and the block's sub-block count to
+    its sub-block)."""
+    out = set()
+    for ids in blocks.values():
+        if len(ids) <= cap:
+            out |= {(a, b) for a in ids for b in ids if a < b}
+            continue
+        root = min(ids)
+        out |= {(root, i) for i in ids if i != root}
+        if salted:
+            k = -(-len(ids) // cap)
+            out |= {
+                (a, b) for a in ids for b in ids if a < b and n_sub[a, k] == n_sub[b, k]
+            }
+    return out
+
+
+@pytest.mark.parametrize("cap", [1, 4])
+@pytest.mark.parametrize("salted", [False, True])
+def test_block_pairs_matches_oracle(spark, cap, salted):
+    # blocks of size 1, cap, cap+1 and 5*cap, plus a null key (no block)
+    sizes = {"one": 1, "at_cap": cap, "over_cap": cap + 1, "hot": 5 * cap}
+    blocks, rows, next_id = {}, [], 0
+    for key, size in sizes.items():
+        blocks[key] = list(range(next_id, next_id + size))
+        rows += [(key, i) for i in blocks[key]]
+        next_id += size
+    rows += [(None, next_id), (None, next_id + 1)]
+    keyed = spark.createDataFrame(rows, "_bk string, file_id long")
+    # the salt as Spark computes it, for every (id, sub-block count)
+    ks = sorted({-(-s // cap) for s in sizes.values()})
+    salt_rows = (
+        spark.createDataFrame([(i, k) for i in range(next_id) for k in ks], "i long, k int")
+        .select("i", "k", F.pmod(F.xxhash64("i"), F.col("k")).alias("s"))
+        .collect()
+    )
+    n_sub = {(r["i"], r["k"]): r["s"] for r in salt_rows}
+
+    out = blocking.block_pairs(keyed, cap, "ch", salted=salted)
+    got = [(r["left_id"], r["right_id"], r["channel"]) for r in out.collect()]
+    assert {c for _, _, c in got} <= {"ch"}
+    assert {(l, r) for l, r, _ in got} == _block_pairs_oracle(blocks, cap, salted, n_sub)

@@ -178,3 +178,34 @@ def test_exchanges_parses_trailing_block(monkeypatch):
     assert len(exs) == 1
     assert exs[0]["cols"] == {"a", "b"}
     assert "hashpartitioning" in exs[0]["args"]
+
+
+
+@pytest.mark.parametrize(
+    "channel, n_exchanges",
+    [("exact_key_pairs", 12), ("minhash_lsh_pairs", 7), ("content_sha_star", 2)],
+)
+def test_keyed_channel_plans_one_block_aggregate(spark, files_df, channel, n_exchanges):
+    """Every keyed channel goes through ``blocking.block_pairs``, whose
+    one ``groupBy("_bk")`` gives a block both its size and its star
+    root. With broadcast disabled, exactly one ``_bk`` exchange carries
+    the root (``min``), and it is the one that also counts the block —
+    no second aggregate and join for the star. The Exchange totals pin
+    the plan: before the primitive, exact_key_pairs planned 14 and
+    minhash_lsh_pairs 9."""
+    import re
+
+    from music_dedupe_spark.operators import blocking
+    from music_dedupe_spark.pipeline import ingest, pair_view
+    from music_dedupe_spark.plans.checks import exchanges
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        exs = exchanges(getattr(blocking, channel)(pair_view(ingest(files_df))))
+        bk = [e for e in exs if re.match(r"hashpartitioning\(_bk#\d+, \d+\)", e["args"])]
+        roots = [e for e in bk if "min" in e["cols"]]
+        assert len(roots) == 1 and "count" in roots[0]["cols"], bk
+        assert len(exs) == n_exchanges, [(sorted(e["cols"]), e["args"]) for e in exs]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
