@@ -8,10 +8,12 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 ``python bench.py --scaling``: the sandbox substitution for the
 N -> 4N executor criterion (BASELINE.md): re-runs the flagship
-pipeline in two subprocesses at local[8] and local[32] on the SAME
+pipeline in two subprocesses at local[n/4] and local[n] on the SAME
 input and reports candidate-pairs-scored/sec at both + the scaling
-efficiency (throughput32 / throughput8) / 4, target >= 0.8; also
-rewrites BENCH/BASELINE.md with the numbers + config dump.
+efficiency (throughput_n / throughput_n/4) / 4, target >= 0.8.
+
+n is the host's core count (``session.DEFAULT_CPUS``);
+SPARK_GRAFT_CPUS overrides it.
 """
 
 from __future__ import annotations
@@ -25,8 +27,12 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from music_dedupe_spark.session import DEFAULT_CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = DEFAULT_CPUS
+#: the two levels of the N -> 4N probe: local[n/4] -> local[n]
+SCALING_LO, SCALING_HI = max(1, int(CPUS) // 4), int(CPUS)
 
 HEADLINE_RELATIONAL = [
     "q1_pricing_summary",
@@ -163,7 +169,7 @@ def prepare_scaling_input(sf_dir: str, work_dir: str) -> int:
     # replicate the input 3x so each timed run is ~3x longer (the ratio
     # was previously capped by the ~4 s per-job fixed floor: session +
     # stage scheduling, which does not shrink with cores and biases the
-    # 8->32 ratio low) — but with PERTURBED ids and names per replica:
+    # N->4N ratio low) — but with PERTURBED ids and names per replica:
     # the scoring kernel factorizes the DISTINCT (name_l, name_r) pairs
     # of each Arrow batch, so verbatim-replicated pairs that co-locate in
     # a batch would skip the DP kernel and inflate pairs/s relative to
@@ -233,7 +239,7 @@ def _subprocess_scoring(cpus: str, work_dir: str, runs: int = 4, reuse: bool = T
     ``reuse``: spark.python.worker.reuse. True is the measurement-honest
     default: with reuse off, EVERY task of EVERY run pays a fresh python
     worker spawn + numpy import, a fixed per-task cost that does not
-    shrink with cores and contaminates the 8->32 ratio. The rare
+    shrink with cores and contaminates the N->4N ratio. The rare
     stuck-worker hang reuse can trigger is contained by the 900 s
     timeout + retry below."""
     code = (
@@ -275,7 +281,7 @@ def _subprocess_scoring(cpus: str, work_dir: str, runs: int = 4, reuse: bool = T
     raise RuntimeError(f"scaling subprocess failed twice:\n{last_err}")
 
 
-def _hardware_ceiling(lo: int = 8, hi: int = 32) -> dict:
+def _hardware_ceiling(lo: int = SCALING_LO, hi: int = SCALING_HI) -> dict:
     """This sandbox substitutes local[N]/local[4N] on ONE machine for the
     N-vs-4N-executor criterion — but a single box shares one memory
     system, so even PURE multiprocess numpy cannot scale 4x. Measure
@@ -315,7 +321,7 @@ def _kernel_rate(seed: int) -> float:
 
 def run_scaling(sf_dir: str) -> dict:
     """The N→4N probe. SPARK_GRAFT_SCALING_LEVELS="lo,hi" (default
-    "8,32") picks the two parallelism levels — the north rule fixes the
+    "n/4,n") picks the two parallelism levels — the north rule fixes the
     RATIO at 4x, not the absolute N, and on one box the low end's
     memory-bandwidth saturation depends on N (local[4]→local[16] probes
     a regime where the shared memory system is not already the
@@ -325,7 +331,9 @@ def run_scaling(sf_dir: str) -> dict:
 
     work_dir = tempfile.mkdtemp(prefix="bench_scaling_")
     n_pairs = prepare_scaling_input(sf_dir, work_dir)
-    lo, hi = os.environ.get("SPARK_GRAFT_SCALING_LEVELS", "8,32").split(",")
+    lo, hi = os.environ.get(
+        "SPARK_GRAFT_SCALING_LEVELS", f"{SCALING_LO},{SCALING_HI}"
+    ).split(",")
     # ALTERNATE the two levels over two rounds and pool the steady-state
     # runs: this VM's wall times drift +-30% over minutes, and measuring
     # the levels back-to-back in one window each would fold that drift

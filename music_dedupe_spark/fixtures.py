@@ -267,19 +267,6 @@ def generate_corpus(
     )
 
 
-def generate_skew_corpus(seed: int = 42) -> Corpus:
-    """~20k rows with a few 500+-member hot blocks (skew/cap tests)."""
-    return generate_corpus(
-        seed=seed,
-        n_base=15000,
-        n_clusters=1200,
-        n_hard_negative_blocks=4,
-        hard_negative_block_size=550,
-        n_short=100,
-        n_junk=60,
-    )
-
-
 def write_corpus(corpus: Corpus, out_dir: str) -> None:
     import os
 

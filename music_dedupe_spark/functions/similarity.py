@@ -25,7 +25,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql.types import DoubleType, IntegerType
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 
 def _codes(s: str) -> np.ndarray:
@@ -178,14 +178,6 @@ def _dedup_apply(a: pd.Series, b: pd.Series, fn, dtype):
 
 def fuzz_ratio_series(a: pd.Series, b: pd.Series) -> pd.Series:
     return _dedup_apply(a, b, fuzz_ratio, "int32")
-
-
-def jaro_winkler_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _dedup_apply(a, b, jaro_winkler, "float64")
-
-
-def norm_levenshtein_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _dedup_apply(a, b, norm_levenshtein, "float64")
 
 
 def _pad_codes(strs: list[str]) -> tuple[np.ndarray, np.ndarray]:
@@ -353,12 +345,6 @@ def name_scores_frame(a: pd.Series, b: pd.Series) -> pd.DataFrame:
 # Spark-facing pandas UDFs (Arrow-batched; SURVEY §2.10)
 # ---------------------------------------------------------------------------
 
-fuzz_ratio_udf = F.pandas_udf(fuzz_ratio_series, IntegerType())
-jaro_winkler_udf = F.pandas_udf(jaro_winkler_series, DoubleType())
-norm_levenshtein_udf = F.pandas_udf(norm_levenshtein_series, DoubleType())
-
-from pyspark.sql.types import StructField, StructType  # noqa: E402
-
 name_scores_udf = F.pandas_udf(
     name_scores_frame,
     StructType(
@@ -369,34 +355,3 @@ name_scores_udf = F.pandas_udf(
         ]
     ),
 )
-
-
-@F.pandas_udf(DoubleType())
-def token_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [token_set_jaccard(x, y) for x, y in zip(a, b)], index=a.index, dtype="float64"
-    )
-
-
-def hash_jaccard_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Jaccard over pre-hashed, sorted, distinct int64 token sets.
-    Sorted-merge intersection via np.intersect1d(assume_unique) — the
-    phase-2 verify kernel of the scoring cascade. A NULL on either side
-    means the pair was gated out upstream (the caller nulls the arrays
-    with when() so non-survivors ship nothing through Arrow) -> NaN.
-    Genuinely empty token sets arrive as empty arrays -> 1.0/0.0."""
-    out = np.empty(len(a), dtype=np.float64)
-    for i, (x, y) in enumerate(zip(a, b)):
-        if x is None or y is None:
-            out[i] = np.nan
-            continue
-        nx, ny = len(x), len(y)
-        if nx == 0 and ny == 0:
-            out[i] = 1.0
-            continue
-        inter = np.intersect1d(x, y, assume_unique=True).size if nx and ny else 0
-        out[i] = inter / (nx + ny - inter)
-    return pd.Series(out, index=a.index)
-
-
-hash_jaccard_udf = F.pandas_udf(hash_jaccard_series, DoubleType())

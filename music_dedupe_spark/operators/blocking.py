@@ -47,6 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from music_dedupe_spark.session import persist
+
 MERSENNE_PRIME = (1 << 61) - 1
 
 
@@ -257,20 +259,12 @@ def minhash_lsh_pairs(
     # star), and its lineage contains the EXPENSIVE minhash mapInPandas —
     # without a persist the signatures are computed once per branch
     # (measured +40% on the whole query). MEMORY_AND_DISK: at 10^12 rows
-    # this is n*bands small rows and spills gracefully; production
-    # checkpoints the candidate stage right after anyway
-    # (pipeline.run_pipeline).
-    from pyspark import StorageLevel
-
-    cached = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    # this is n*bands small rows and spills gracefully. The cache belongs
+    # to the caller's cache_scope: run_pipeline and incremental_link
+    # release it once the candidate stage is materialized.
+    cached = persist(banded)
     # a pair sharing several bands is proposed once per band
-    out = block_pairs(cached, band_cap, channel).dropDuplicates(["left_id", "right_id"])
-    # expose the persisted dependency so callers can unpersist once
-    # their downstream result is materialized (run_pipeline does) —
-    # otherwise the cached signatures pin executor memory for the
-    # session lifetime
-    out._mds_persisted = [cached]
-    return out
+    return block_pairs(cached, band_cap, channel).dropDuplicates(["left_id", "right_id"])
 
 
 #: Explicit channel precedence for union_channels: when the same pair is
@@ -289,7 +283,6 @@ def union_channels(*channels: DataFrame) -> DataFrame:
     """unionByName + dedup on the pair key (SURVEY §2.7); keeps the
     highest-precedence channel tag per pair via the explicit
     CHANNEL_PRIORITY map (exact > neighborhood > lsh), not string order."""
-    deps = [d for c in channels for d in getattr(c, "_mds_persisted", [])]
     out = channels[0]
     for c in channels[1:]:
         out = out.unionByName(c)
@@ -302,11 +295,8 @@ def union_channels(*channels: DataFrame) -> DataFrame:
     )
     # min over (priority, channel) struct: one shuffle, deterministic
     # tie-break on name for channels sharing a priority bucket.
-    merged = (
+    return (
         out.groupBy("left_id", "right_id")
         .agg(F.min(F.struct(prio.alias("_p"), F.col("channel"))).alias("_pc"))
         .select("left_id", "right_id", F.col("_pc.channel").alias("channel"))
     )
-    if deps:
-        merged._mds_persisted = deps
-    return merged

@@ -339,8 +339,3 @@ def latest_checkpoint(checkpoint_dir: str, spark: SparkSession | None = None) ->
 
 def _write_metrics(spark: SparkSession, checkpoint_dir: str, row: dict) -> None:
     fsutil.append_line(spark, f"{checkpoint_dir}/_metrics.jsonl", json.dumps(row))
-
-
-def clusters_of(spark: SparkSession, assignment: DataFrame) -> DataFrame:
-    """(entity_id, n_members) summary."""
-    return assignment.groupBy("entity_id").agg(F.count("*").alias("n_members"))

@@ -16,8 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from music_dedupe_spark.operators.blocking import minhash_signatures
 from music_dedupe_spark.queries import _local_df, _t, register
+from music_dedupe_spark.session import cache_scope, persist
 
 
 @register(
@@ -93,15 +93,9 @@ def ngram_jaccard_pairs(
     # persist each branch re-explodes every document. MEMORY_AND_DISK:
     # ~10x the text volume, spills to local disk at scale — the standard
     # space/time trade for set-similarity joins (recompute instead by
-    # dropping the persist if local disk is the scarcer resource).
-    from pyspark import StorageLevel
-
-    # keep the persisted handle in its own variable — `shingles` is
-    # reassigned by the anti-join below, and unpersisting the reassigned
-    # DataFrame would be a silent no-op (the cache would leak).
-    cached = shingles.persist(StorageLevel.MEMORY_AND_DISK)
-    shingles = cached
-    caches = [cached]
+    # dropping the persist if local disk is the scarcer resource). Both
+    # shingle caches belong to the caller's cache_scope.
+    shingles = persist(shingles)
     if df_cap is not None:
         # shingles are distinct per doc (array_distinct), so count(*) per
         # shk == per-block document frequency. groupBy (not a window):
@@ -119,8 +113,7 @@ def ngram_jaccard_pairs(
         # per branch — 2-3 redundant full passes over the shingle set
         # (guide §2.3: don't recompute what you can keep). kept ⊆ the
         # pre-cut cache, so the added footprint is bounded by it.
-        shingles = shingles.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(shingles)
+        shingles = persist(shingles)
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = shingles.select(F.col("doc_id").alias("left_doc"), "shk")
     b = shingles.select(F.col("doc_id").alias("right_doc"), "shk")
@@ -133,16 +126,12 @@ def ngram_jaccard_pairs(
     sa = sizes.select(F.col("doc_id").alias("left_doc"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("right_doc"), F.col("n").alias("nb"))
     jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    out = (
+    return (
         inter.join(sa, "left_doc")
         .join(sb, "right_doc")
         .filter(jac >= threshold)
         .select("left_doc", "right_doc", F.round(jac, 4).alias("jaccard"))
     )
-    # unpersist handles for callers that materialize the result and want
-    # the ~10x-text shingle caches released before session end
-    out._mds_persisted = caches
-    return out
 
 
 @register(
@@ -180,9 +169,14 @@ def dedup_ngram_jaccard(spark, sf):
     frequency cut (see ngram_jaccard_pairs) — the oracle SQL applies the
     identical cut, so parity holds even when the cap bites. At scale the
     shingle join is the textbook document-similarity join; the
-    (lang, source) block plus the DF cut bound the candidate space."""
+    (lang, source) block plus the DF cut bound the candidate space.
+
+    The sorted pairs are materialized once with an eager
+    ``localCheckpoint`` (the ``dedup_minhash_lsh`` caveat applies), so
+    the shingle caches are released before the entry returns."""
     d = _t(spark, sf, "documents")
-    return ngram_jaccard_pairs(d).orderBy("left_doc", "right_doc")
+    with cache_scope():
+        return ngram_jaccard_pairs(d).orderBy("left_doc", "right_doc").localCheckpoint()
 
 
 #: Candidate-recall floor the self-asserting LSH entry enforces against
@@ -342,25 +336,23 @@ def dedup_minhash_lsh(spark, sf):
         # duplicated corpus the hash-pick can land >cap identical
         # originals in one bucket, and a star-collapse there would
         # suppress (orig_i, ~orig_i) for every non-root original —
-        # failing the floor with a perfectly healthy bander
-        cpairs = minhash_lsh_pairs(
-            canary_input,
-            num_perm=128,
-            bands=32,
-            shingle_k=5,
-            band_cap=2 * len(planted) + 1,
-        )
-        cdeps = getattr(cpairs, "_mds_persisted", [])
-        try:
+        # failing the floor with a perfectly healthy bander. The pass
+        # opens its own cache scope: it runs on the canary thread, which
+        # never sees the real pass's scope
+        with cache_scope():
+            cpairs = minhash_lsh_pairs(
+                canary_input,
+                num_perm=128,
+                bands=32,
+                shingle_k=5,
+                band_cap=2 * len(planted) + 1,
+            )
             # emitted pairs are canonical in string order and every real
             # id sorts before "~": (orig, ~orig) is the canonical form
             found = {
                 (r["left_id"], r["right_id"])
                 for r in cpairs.select("left_id", "right_id").collect()
             }
-        finally:
-            for dep in cdeps:
-                dep.unpersist()
         truth_c = {(str(o), f"{CANARY_PREFIX}{o}") for o in planted}
         recall_c = len(truth_c & found) / len(truth_c)
         if recall_c < LSH_RECALL_FLOOR:
@@ -385,22 +377,6 @@ def dedup_minhash_lsh(spark, sf):
     # and REVERTED: the ~2 s serial kernel it parallelizes is cheaper
     # than the 32-way task fan-out it forces on every downstream banding
     # stage at this corpus size; entry went 12-16 s -> 19-32 s.)
-    pairs = minhash_lsh_pairs(
-        d.select(
-            F.col("doc_id").cast("string").alias("file_id"),
-            F.col("text").alias("content"),
-        ),
-        num_perm=128,
-        bands=32,
-        shingle_k=5,
-    )
-    # capture the persisted-handle list BEFORE .select() (the attribute
-    # does not survive DataFrame transformations — round-3 lesson)
-    pair_deps = getattr(pairs, "_mds_persisted", [])
-    truth_deps: list = []
-    # unpersist in a finally: the recall raise (or a failed collect)
-    # must not strand MEMORY_AND_DISK signature caches in a long-lived
-    # session — the exact leak the canary branch already guards against
     canary_future = _CANARY_POOL.submit(_canary_check) if planted else None
     try:
         # canonicalize to NUMERIC (left < right) pair order JVM-side and
@@ -410,22 +386,32 @@ def dedup_minhash_lsh(spark, sf):
         # collect — ~4 s at sf0.1's 351k pairs). String-canonical pairs
         # map 1:1 onto numeric-canonical pairs, so the rows are the
         # sorted distinct set exactly as before; the checkpoint is a
-        # plan leaf (banding caches can be released below) and, unlike a
-        # persist, its blocks free with the DataFrame instead of pinning
-        # the session.
-        out = (
-            pairs.select(
-                F.least(
-                    F.col("left_id").cast("long"), F.col("right_id").cast("long")
-                ).alias("left_doc"),
-                F.greatest(
-                    F.col("left_id").cast("long"), F.col("right_id").cast("long")
-                ).alias("right_doc"),
+        # plan leaf, so the scope can release the banding cache, and,
+        # unlike a persist, its blocks free with the DataFrame instead
+        # of pinning the session.
+        with cache_scope():
+            pairs = minhash_lsh_pairs(
+                d.select(
+                    F.col("doc_id").cast("string").alias("file_id"),
+                    F.col("text").alias("content"),
+                ),
+                num_perm=128,
+                bands=32,
+                shingle_k=5,
             )
-            .dropDuplicates(["left_doc", "right_doc"])
-            .orderBy("left_doc", "right_doc")
-            .localCheckpoint()
-        )
+            out = (
+                pairs.select(
+                    F.least(
+                        F.col("left_id").cast("long"), F.col("right_id").cast("long")
+                    ).alias("left_doc"),
+                    F.greatest(
+                        F.col("left_id").cast("long"), F.col("right_id").cast("long")
+                    ).alias("right_doc"),
+                )
+                .dropDuplicates(["left_doc", "right_doc"])
+                .orderBy("left_doc", "right_doc")
+                .localCheckpoint()
+            )
         if canary_future is not None:
             canary_future.result()  # re-raise a canary-recall failure
         if total_chars <= LSH_ORGANIC_TRUTH_MAX_CHARS:
@@ -433,9 +419,12 @@ def dedup_minhash_lsh(spark, sf):
             # gated recall check — and the gate caps the corpus (and so
             # the collect) small
             cand = {(r["left_doc"], r["right_doc"]) for r in out.collect()}
-            truth_full = ngram_jaccard_pairs(d, k=5, threshold=LSH_TRUTH_JACCARD)
-            truth_deps = getattr(truth_full, "_mds_persisted", [])
-            truth_rows = truth_full.select("left_doc", "right_doc").collect()
+            with cache_scope():
+                truth_rows = (
+                    ngram_jaccard_pairs(d, k=5, threshold=LSH_TRUTH_JACCARD)
+                    .select("left_doc", "right_doc")
+                    .collect()
+                )
             if truth_rows:
                 # truth pairs are canonical in doc_id NUMERIC order —
                 # the same normalization as ``out``
@@ -449,13 +438,10 @@ def dedup_minhash_lsh(spark, sf):
                         f" — banding regressed"
                     )
     finally:
-        # wait for the canary thread before unpersisting anything: its
-        # error (if any) was surfaced by result() above; on an earlier
-        # raise this just drains the already-submitted check
+        # on an earlier raise, drain the already-submitted canary check
+        # so no job of this call outlives it
         if canary_future is not None:
             wait([canary_future])
-        for dep in pair_deps + truth_deps:
-            dep.unpersist()
     return out
 
 

@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from music_dedupe_spark.operators import blocking, clustering, scoring
+from music_dedupe_spark.session import cache_scope, keep, persist
 
 
 def _touching_new(pairs: DataFrame, new_feats: DataFrame) -> DataFrame:
@@ -76,11 +77,7 @@ def _touching_new(pairs: DataFrame, new_feats: DataFrame) -> DataFrame:
     keep_r = pairs.join(
         F.broadcast(new_ids.withColumnRenamed("file_id", "right_id")), "right_id", "left_semi"
     )
-    out = keep_l.unionByName(keep_r).dropDuplicates(["left_id", "right_id"])
-    deps = getattr(pairs, "_mds_persisted", [])
-    if deps:
-        out._mds_persisted = deps
-    return out
+    return keep_l.unionByName(keep_r).dropDuplicates(["left_id", "right_id"])
 
 
 def _delta_exact_key_pairs(
@@ -131,6 +128,96 @@ def _not_same_entity(pairs: DataFrame, assignment: DataFrame) -> DataFrame:
     )
 
 
+def _updated_sig_store(
+    pv_all: DataFrame, existing_signatures: DataFrame | None, cfg
+) -> tuple[DataFrame, int]:
+    """The MinHash signature store over old ∪ new, hashing ONLY content
+    ``existing_signatures`` does not cover (the delta, plus any old rows
+    missing from a stale store); stored signatures are exact for fixed
+    (num_perm, shingle_k, seed). Returns the store and the number of
+    signatures computed. The delta's signatures are persisted and kept
+    past the candidate stage's cache scope, unless a checkpoint dir
+    compacts the store."""
+    sig_store = existing_signatures
+    if sig_store is not None:
+        # a store built under a different num_perm would join cleanly
+        # and silently break LSH banding — check the one parameter the
+        # data itself reveals (sig length) on a single row. shingle_k /
+        # seed mismatches are not detectable from the data; the store
+        # contract is "produced by this engine with the same cfg".
+        probe = sig_store.select(F.size("sig").alias("_n")).limit(1).collect()
+        if probe and probe[0]["_n"] != cfg.minhash_num_perm:
+            raise ValueError(
+                f"existing_signatures has {probe[0]['_n']}-perm signatures "
+                f"but cfg.minhash_num_perm={cfg.minhash_num_perm}; rebuild "
+                "the store or pass the matching config"
+            )
+    narrow = pv_all.select("file_id", "content_sha256")
+    if sig_store is not None:
+        # membership decided on the NARROW (file_id, sha) projection;
+        # only the (small) miss set's content rows are then pulled by
+        # a semi-join on file_id — the corpus content never shuffles
+        # by sha just to discover it is already covered.
+        miss_ids = narrow.join(
+            sig_store.select("content_sha256"), "content_sha256", "left_anti"
+        ).select("file_id")
+        to_hash = pv_all.join(miss_ids, "file_id", "left_semi")
+    else:
+        to_hash = pv_all
+    # one representative per distinct missing content — to_hash is the
+    # DELTA, so this dropDuplicates moves only O(|new|) content — and
+    # the sha rides through the kernel so the store is a projection
+    reps = to_hash.dropDuplicates(["content_sha256"])
+    rep_sigs = blocking.minhash_signatures(
+        reps,
+        cfg.minhash_num_perm,
+        cfg.shingle_k,
+        seed=1,
+        passthrough=("content_sha256",),
+    )
+    # the returned store reads it: it outlives the candidate stage
+    delta_store = keep(persist(rep_sigs.select("content_sha256", "sig")))
+    n_computed = delta_store.count()
+    sig_store = (
+        delta_store if sig_store is None else sig_store.unionByName(delta_store)
+    )
+    if cfg.checkpoint_dir:
+        # COMPACT the store: chained delta runs would otherwise stack
+        # one persisted delta + one union node per run — unbounded
+        # lineage depth and pinned executor memory. Writing the union
+        # out and re-reading it resets both; the superseded delta
+        # persist is released immediately. The path is VERSIONED
+        # (sig_store_0000, _0001, ...) because the incoming
+        # existing_signatures may itself be a parquet read of the
+        # previous version in the same checkpoint dir — overwriting a
+        # path that the write's own input plan reads is undefined in
+        # Spark. Superseded versions are dead after the write returns
+        # (no returned plan references them) and may be deleted by
+        # external housekeeping. Existence is checked through the
+        # Hadoop FileSystem of the checkpoint URI — a driver-local
+        # os.path check would always see "absent" on hdfs://s3a://
+        # dirs and re-target sig_store_0000, overwriting the very
+        # store the union's input plan is reading. The PUBLISH is
+        # write-to-temp + fsutil.claim_versioned_dir, which handles
+        # the concurrent-racer case including Hadoop's
+        # dir-rename-NESTS-instead-of-failing semantics — a loser
+        # re-claims the next index with its own data instead of
+        # silently dropping it.
+        import uuid as _uuid
+
+        from music_dedupe_spark import fsutil
+
+        spark = pv_all.sparkSession
+        tmp = f"{cfg.checkpoint_dir}/.tmp_sig_store_{_uuid.uuid4().hex}"
+        sig_store.write.mode("overwrite").parquet(tmp)
+        path = fsutil.claim_versioned_dir(
+            spark, tmp, cfg.checkpoint_dir, "sig_store"
+        )
+        sig_store = spark.read.parquet(path)
+        delta_store.unpersist()
+    return sig_store, n_computed
+
+
 def incremental_link(
     new_files: DataFrame,
     existing_features: DataFrame,
@@ -150,8 +237,13 @@ def incremental_link(
     ``cfg.checkpoint_dir`` set, the updated store is COMPACTED to
     parquet (``sig_store_NNNN``) so chained delta runs don't stack
     union lineage and persisted deltas; without one, the returned
-    store carries ``_mds_persisted`` unpersist handles the caller can
-    release once the store is superseded.
+    store reads the persisted delta signatures.
+
+    Cache lifetimes: the persisted new and combined features, the delta
+    signatures and the delta's candidate and scored pairs are run
+    outputs, owned by the caller's ``cache_scope`` (by the session when
+    none is open); the channels' own caches are released once the
+    candidate stage is materialized.
 
     Returns dict with ``features`` (new rows only), ``candidate_pairs``
     (delta), ``scored_pairs``, ``clusters`` — the FULL updated
@@ -169,7 +261,7 @@ def incremental_link(
     )
 
     cfg = cfg or PipelineConfig()
-    new_feats = ingest(new_files).withColumn("_is_new", F.lit(True)).persist()
+    new_feats = persist(ingest(new_files).withColumn("_is_new", F.lit(True)))
     # a features table persisted by an older engine version may predate
     # the internal-id column; unionByName(allowMissingColumns=True) would
     # then NULL-fill fid for every old row, pair_view would hand the pair
@@ -179,137 +271,61 @@ def incremental_link(
     if "fid" not in existing_features.columns:
         existing_features = existing_features.withColumn("fid", F.xxhash64("file_id"))
     old_feats = existing_features.withColumn("_is_new", F.lit(False))
-    all_feats = old_feats.unionByName(new_feats, allowMissingColumns=True).persist()
+    all_feats = persist(old_feats.unionByName(new_feats, allowMissingColumns=True))
     # pair-volume stages run in the internal 8-byte id space, exactly
     # like run_pipeline; fid = xxhash64(file_id) is a pure projection,
     # so the existing assignment maps into it with no join
     pv_new = pair_view(new_feats)
     pv_all = pair_view(all_feats)
 
-    channels = [
-        _delta_content_star(pv_new, pv_all),
-        _delta_exact_key_pairs(pv_new, pv_all, cap=cfg.block_cap),
-    ]
-
-    # sorted-neighborhood channel (module docstring: group heads shift
-    # with the global order, so this channel cannot be pruned to
-    # new-touching pairs without losing full-run pairs). The pass itself
-    # is narrow — (key, id) only, one range shuffle. ONE shared
-    # implementation with the batch pipeline (pipeline.rungroup_channel)
-    # so gate/threshold/sizing can never drift between the two paths.
-    # The gate size is all_feats' OWN count — cfg.n_rows_hint must not
-    # be reused here: run_pipeline mutates it to the OLD corpus size,
-    # and gating old ∪ new on |old| would run the non-scaling channel
-    # past its ceiling (and diverge from what a full rerun does). The
-    # count also materializes the all_feats persist.
-    from music_dedupe_spark.pipeline import rungroup_channel
-
-    rg_pairs = rungroup_channel(pv_all, cfg, all_feats.count())
-    if rg_pairs is not None:
-        channels.append(_not_same_entity(rg_pairs, existing_assignment))
-
     sig_store = existing_signatures
-    delta_store = None
     metrics: dict[str, int] = {}
-    if cfg.use_lsh:
-        # hash ONLY content the store does not cover (the delta, plus any
-        # old rows missing from a stale store); stored signatures are
-        # exact for fixed (num_perm, shingle_k, seed).
-        if sig_store is not None:
-            # a store built under a different num_perm would join cleanly
-            # and silently break LSH banding — check the one parameter the
-            # data itself reveals (sig length) on a single row. shingle_k /
-            # seed mismatches are not detectable from the data; the store
-            # contract is "produced by this engine with the same cfg".
-            probe = sig_store.select(F.size("sig").alias("_n")).limit(1).collect()
-            if probe and probe[0]["_n"] != cfg.minhash_num_perm:
-                raise ValueError(
-                    f"existing_signatures has {probe[0]['_n']}-perm signatures "
-                    f"but cfg.minhash_num_perm={cfg.minhash_num_perm}; rebuild "
-                    "the store or pass the matching config"
-                )
-        narrow = pv_all.select("file_id", "content_sha256")
-        if sig_store is not None:
-            # membership decided on the NARROW (file_id, sha) projection;
-            # only the (small) miss set's content rows are then pulled by
-            # a semi-join on file_id — the corpus content never shuffles
-            # by sha just to discover it is already covered.
-            miss_ids = narrow.join(
-                sig_store.select("content_sha256"), "content_sha256", "left_anti"
-            ).select("file_id")
-            to_hash = pv_all.join(miss_ids, "file_id", "left_semi")
-        else:
-            to_hash = pv_all
-        # one representative per distinct missing content — to_hash is the
-        # DELTA, so this dropDuplicates moves only O(|new|) content — and
-        # the sha rides through the kernel so the store is a projection
-        reps = to_hash.dropDuplicates(["content_sha256"])
-        rep_sigs = blocking.minhash_signatures(
-            reps,
-            cfg.minhash_num_perm,
-            cfg.shingle_k,
-            seed=1,
-            passthrough=("content_sha256",),
-        )
-        delta_store = rep_sigs.select("content_sha256", "sig").persist()
-        metrics["n_signatures_computed"] = delta_store.count()
-        sig_store = (
-            delta_store if sig_store is None else sig_store.unionByName(delta_store)
-        )
-        if cfg.checkpoint_dir:
-            # COMPACT the store: chained delta runs would otherwise stack
-            # one persisted delta + one union node per run — unbounded
-            # lineage depth and pinned executor memory. Writing the union
-            # out and re-reading it resets both; the superseded delta
-            # persist is released immediately. The path is VERSIONED
-            # (sig_store_0000, _0001, ...) because the incoming
-            # existing_signatures may itself be a parquet read of the
-            # previous version in the same checkpoint dir — overwriting a
-            # path that the write's own input plan reads is undefined in
-            # Spark. Superseded versions are dead after the write returns
-            # (no returned plan references them) and may be deleted by
-            # external housekeeping. Existence is checked through the
-            # Hadoop FileSystem of the checkpoint URI — a driver-local
-            # os.path check would always see "absent" on hdfs://s3a://
-            # dirs and re-target sig_store_0000, overwriting the very
-            # store the union's input plan is reading. The PUBLISH is
-            # write-to-temp + fsutil.claim_versioned_dir, which handles
-            # the concurrent-racer case including Hadoop's
-            # dir-rename-NESTS-instead-of-failing semantics — a loser
-            # re-claims the next index with its own data instead of
-            # silently dropping it.
-            import uuid as _uuid
+    # the channels' own caches (banded LSH signatures, the neighborhood
+    # pass) live until the candidate stage is materialized
+    with cache_scope():
+        channels = [
+            _delta_content_star(pv_new, pv_all),
+            _delta_exact_key_pairs(pv_new, pv_all, cap=cfg.block_cap),
+        ]
 
-            from music_dedupe_spark import fsutil
+        # sorted-neighborhood channel (module docstring: group heads shift
+        # with the global order, so this channel cannot be pruned to
+        # new-touching pairs without losing full-run pairs). The pass itself
+        # is narrow — (key, id) only, one range shuffle. ONE shared
+        # implementation with the batch pipeline (pipeline.rungroup_channel)
+        # so gate/threshold/sizing can never drift between the two paths.
+        # The gate size is all_feats' OWN count — cfg.n_rows_hint must not
+        # be reused here: run_pipeline mutates it to the OLD corpus size,
+        # and gating old ∪ new on |old| would run the non-scaling channel
+        # past its ceiling (and diverge from what a full rerun does). The
+        # count also materializes the all_feats persist.
+        from music_dedupe_spark.pipeline import rungroup_channel
 
-            spark = new_files.sparkSession
-            tmp = f"{cfg.checkpoint_dir}/.tmp_sig_store_{_uuid.uuid4().hex}"
-            sig_store.write.mode("overwrite").parquet(tmp)
-            path = fsutil.claim_versioned_dir(
-                spark, tmp, cfg.checkpoint_dir, "sig_store"
+        rg_pairs = rungroup_channel(pv_all, cfg, all_feats.count())
+        if rg_pairs is not None:
+            channels.append(_not_same_entity(rg_pairs, existing_assignment))
+
+        if cfg.use_lsh:
+            sig_store, metrics["n_signatures_computed"] = _updated_sig_store(
+                pv_all, existing_signatures, cfg
             )
-            sig_store = spark.read.parquet(path)
-            delta_store.unpersist()
-            delta_store = None
-        all_sigs = narrow.join(sig_store, "content_sha256").select("file_id", "sig")
-        lsh = blocking.minhash_lsh_pairs(
-            pv_all,
-            num_perm=cfg.minhash_num_perm,
-            bands=cfg.minhash_bands,
-            shingle_k=cfg.shingle_k,
-            sigs=all_sigs,
-        )
-        channels.append(_touching_new(lsh, pv_new))
-    candidate_pairs = blocking.union_channels(*channels)
-    # release operator-persisted subplans (banded LSH signatures) once the
-    # candidate stage is materialized — same discipline as run_pipeline
-    _cand_deps = getattr(candidate_pairs, "_mds_persisted", [])
-    candidate_pairs = candidate_pairs.persist()
-    candidate_pairs.count()
-    for _d in _cand_deps:
-        _d.unpersist()
+            all_sigs = (
+                pv_all.select("file_id", "content_sha256")
+                .join(sig_store, "content_sha256")
+                .select("file_id", "sig")
+            )
+            lsh = blocking.minhash_lsh_pairs(
+                pv_all,
+                num_perm=cfg.minhash_num_perm,
+                bands=cfg.minhash_bands,
+                shingle_k=cfg.shingle_k,
+                sigs=all_sigs,
+            )
+            channels.append(_touching_new(lsh, pv_new))
+        candidate_pairs = keep(persist(blocking.union_channels(*channels)))
+        candidate_pairs.count()
 
-    scored = scoring.score_candidates(candidate_pairs, pv_all, cfg.scoring).persist()
+    scored = persist(scoring.score_candidates(candidate_pairs, pv_all, cfg.scoring))
     delta_edges = scoring.matched_pairs(scored)
 
     # fold the existing resolution in via clustering.fold_incremental
@@ -336,14 +352,6 @@ def incremental_link(
         )
         .dropDuplicates(["member_id"])
     )
-    if sig_store is not None and delta_store is not None:
-        # no checkpoint dir to compact into: hand the caller the persisted
-        # delta handle so a long-running session can release a superseded
-        # store (unpersist each handle once the next run's store — built
-        # on top of this union — has been compacted or discarded).
-        sig_store._mds_persisted = getattr(
-            existing_signatures, "_mds_persisted", []
-        ) + [delta_store]
     return {
         "features": new_feats.drop("_is_new"),
         # lazy public-id views over the internally persisted fid pairs

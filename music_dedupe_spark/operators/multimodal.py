@@ -1,108 +1,15 @@
-"""Multimodal (binary) column plumbing.
+"""Side-output artifacts (SURVEY S12).
 
 The reference extracts embedded album art bytes and writes them as
-side-output .jpg files (/root/reference/app/core.py:943-958) and reads
-audio duration/bitrate from media headers (core.py:335-393). The
-engine-side generalization: media payloads are opaque ``binary``
-columns with typed metadata structs; decode / feature-extract /
-resize / frame-sample run as Arrow-batched ``mapInPandas`` operators.
-
-The actual codecs (PIL/ffmpeg/librosa) are NOT in this container, so
-the decode kernel is stubbed: ``decode_stub=True`` (default) derives
-deterministic fake features from the bytes; ``decode_stub=False``
-raises NotImplementedError where the real library call belongs. The
-Spark-side plumbing — schema, batch iteration, partition sizing,
-side-output table — is real and tested.
+side-output .jpg files (its app/core.py:943-958) next to an .nfo XML
+file per track. The engine derives the same artifacts as a
+table (``side_output_artifacts``) instead of mutating a filesystem.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-FEATURE_DIM = 16
-
-
-def _decode_features(payload: bytes, kind: str, decode_stub: bool) -> np.ndarray:
-    if not decode_stub:
-        # real implementation: PIL.Image.open / librosa.load / pyav frame
-        # sample — libraries not present in this container
-        raise NotImplementedError("media codecs unavailable; run with decode_stub=True")
-    # deterministic fake: hash-seeded feature vector (stable across runs
-    # and partitionings; unit-norm like a real embedding)
-    h = hashlib.blake2b((kind or "").encode() + (payload or b""), digest_size=FEATURE_DIM * 4).digest()
-    vec = np.frombuffer(h, dtype=np.uint32).astype(np.float64)
-    vec = vec / np.linalg.norm(vec) if vec.any() else vec
-    return vec
-
-
-def extract_media_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """(media_id, kind, features: array<double>, n_bytes) — the decode /
-    feature-extract operator. Arrow batches keep payload bytes off the
-    driver; partition sizing is byte-aware (repartition upstream by
-    ``n_bytes`` buckets when payloads are large)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _decode_features(p, k, decode_stub).tolist()
-                for p, k in zip(pdf["payload"], pdf["kind"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "features": feats,
-                    "n_bytes": [len(p or b"") for p in pdf["payload"]],
-                }
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        run, schema="media_id string, kind string, features array<double>, n_bytes long"
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per frame to decode
-    (media_id, frame_idx, offset_ms). The decode itself is the stubbed
-    kernel above; the plan is a pure Catalyst sequence-explode, so the
-    work list is distributed and prunable before any codec runs."""
-    n_frames = F.greatest(
-        (F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1)
-    )
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.posexplode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx", "_"),
-    ).select(
-        "media_id",
-        "frame_idx",
-        (F.col("frame_idx") * every_ms).alias("offset_ms"),
-    )
 
 
 #: XML template of the reference's NFO side output

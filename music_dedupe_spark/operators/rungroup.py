@@ -38,9 +38,9 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
 
 from music_dedupe_spark.functions.similarity import fuzz_ratio
+from music_dedupe_spark.session import cache_scope, keep, persist
 
 DEFAULT_THRESHOLD = 85  # fuzz.ratio > 85, /root/reference/app/core.py:697
 
@@ -103,14 +103,6 @@ def sorted_run_groups(
     # id, so the mapInPandas schema is derived from the input column.
     id_type = dict(df.dtypes)[id_col]
 
-    parted = (
-        df.select(F.col(id_col).alias("_id"), F.coalesce(F.col(key_col), F.lit("")).alias("_key"))
-        .repartitionByRange(n, "_key", "_id")
-        .sortWithinPartitions("_key", "_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
     def make_pass(carries: dict[int, tuple]):
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             head: str | None = None
@@ -171,37 +163,47 @@ def sorted_run_groups(
         f"_id {id_type}, _key string, _pid int, _head {id_type}, "
         "_sum boolean, _first string"
     )
-    carries: dict[int, tuple] = {}
-    rounds = max_rounds or n + 1
-    result = None
-    for rnd in range(rounds):
-        result = parted.mapInPandas(make_pass(carries), schema=schema).persist(
-            StorageLevel.MEMORY_AND_DISK
+    # the range-partitioned input and every round's result are this
+    # pass's own caches; only the last round's result, which every
+    # caller reads, outlives it (the collect of each round caches all
+    # of its partitions, so the input is no longer read)
+    with cache_scope():
+        parted = persist(
+            df.select(F.col(id_col).alias("_id"), F.coalesce(F.col(key_col), F.lit("")).alias("_key"))
+            .repartitionByRange(n, "_key", "_id")
+            .sortWithinPartitions("_key", "_id")
+            .withColumn("_pid", F.spark_partition_id())
         )
-        outs = {}
-        firsts = {}
-        for r in result.filter(F.col("_sum")).collect():
-            outs[int(r["_pid"])] = (r["_key"], r["_head"])
-            firsts[int(r["_pid"])] = r["_first"]
-        # carry into partition p = outgoing head of the nearest non-empty
-        # predecessor partition
-        new_carries: dict[int, tuple] = {}
-        prev: tuple | None = None
-        for pid in sorted(outs):
-            if prev is not None:
-                new_carries[pid] = prev
-            prev = outs[pid]
-        if new_carries == carries:
-            break
-        # absorption shortcut: a carry only changes a partition's result
-        # when its first row would JOIN the incoming open group; if no
-        # boundary fuzzy-joins, this round is already the global pass.
-        if rnd == 0 and not any(
-            fuzz_ratio(c[0], firsts[p]) > threshold for p, c in new_carries.items()
-        ):
-            break
-        carries = new_carries
-        result.unpersist()
+        carries: dict[int, tuple] = {}
+        rounds = max_rounds or n + 1
+        result = None
+        for rnd in range(rounds):
+            result = persist(parted.mapInPandas(make_pass(carries), schema=schema))
+            outs = {}
+            firsts = {}
+            for r in result.filter(F.col("_sum")).collect():
+                outs[int(r["_pid"])] = (r["_key"], r["_head"])
+                firsts[int(r["_pid"])] = r["_first"]
+            # carry into partition p = outgoing head of the nearest non-empty
+            # predecessor partition
+            new_carries: dict[int, tuple] = {}
+            prev: tuple | None = None
+            for pid in sorted(outs):
+                if prev is not None:
+                    new_carries[pid] = prev
+                prev = outs[pid]
+            if new_carries == carries:
+                break
+            # absorption shortcut: a carry only changes a partition's result
+            # when its first row would JOIN the incoming open group; if no
+            # boundary fuzzy-joins, this round is already the global pass.
+            if rnd == 0 and not any(
+                fuzz_ratio(c[0], firsts[p]) > threshold for p, c in new_carries.items()
+            ):
+                break
+            carries = new_carries
+            result.unpersist()
+        keep(result)
 
     rows = result.filter(~F.col("_sum"))
     out = rows.select(

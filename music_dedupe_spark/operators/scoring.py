@@ -55,9 +55,6 @@ class ScoringConfig:
 #: joins (BENCH/ab_sha_r05.json).
 SHA_PREFIX_HEX_CHARS = 16
 
-NARROW_COLS = ("file_id", "norm_name", "content_sha256")
-FEATURE_COLS = ("file_id", "norm_name", "tokens", "content_sha256", "size_chars", "quality")
-
 
 def duplicate_decision(cfg: ScoringConfig | None = None) -> Column:
     """THE duplicate decision rule — the single implementation, applied

@@ -33,6 +33,7 @@ from music_dedupe_spark.functions.text import (
 from music_dedupe_spark.operators import blocking, clustering, rungroup, scoring
 from music_dedupe_spark.operators.scoring import ScoringConfig
 from music_dedupe_spark.operators.survivorship import rank_survivors
+from music_dedupe_spark.session import cache_scope, keep, persist
 
 
 @dataclass
@@ -211,7 +212,11 @@ def generate_candidates(
 
 def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[str, DataFrame]:
     """Returns the stage DataFrames: features, candidate_pairs,
-    scored_pairs, matched_pairs, clusters, ranked (survivorship)."""
+    scored_pairs, matched_pairs, clusters, ranked (survivorship).
+
+    The persisted stages belong to the caller's ``cache_scope`` (to the
+    session when none is open); the blocking channels' caches are
+    released once the candidate stage is materialized."""
     cfg = cfg or PipelineConfig()
     features = ingest(files)
     if cfg.checkpoint_dir:
@@ -220,7 +225,7 @@ def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[st
     else:
         # each downstream stage (4 blocking channels, scoring join, CC
         # loop, survivorship) re-reads features: persist once
-        features = features.persist()
+        features = persist(features)
 
     if cfg.n_rows_hint is None:
         cfg.n_rows_hint = features.count()  # also materializes the persist
@@ -264,38 +269,35 @@ def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[st
             sigs = files.sparkSession.read.parquet(f"{cfg.checkpoint_dir}/minhash_sigs")
         else:
             # consumed by both the LSH banding and the returned store;
-            # stays persisted for the session (like features) so the
-            # caller's store handle never re-runs the kernel
-            sigs = sigs.persist()
+            # a run output like features, so the caller's store handle
+            # never re-runs the kernel
+            sigs = persist(sigs)
         sig_store = sigs.select("content_sha256", "sig").dropDuplicates(
             ["content_sha256"]
         )
         minhash_sigs = sigs.select("file_id", "sig")
 
-    candidate_pairs = generate_candidates(pv, cfg, minhash_sigs=minhash_sigs)
-    # operators may persist expensive shared subplans (minhash banded
-    # signatures) and hand back the handles; release them once the
-    # candidate stage is materialized below
-    _cand_deps = getattr(candidate_pairs, "_mds_persisted", [])
-    if cfg.checkpoint_dir:
-        _checkpoint(candidate_pairs, f"{cfg.checkpoint_dir}/stage1_candidates")
-        candidate_pairs = files.sparkSession.read.parquet(
-            f"{cfg.checkpoint_dir}/stage1_candidates"
-        )
-    else:
-        candidate_pairs = candidate_pairs.persist()
-        candidate_pairs.count()  # materialize before dropping the deps
-    for _d in _cand_deps:
-        _d.unpersist()
+    # the channels' own caches (banded LSH signatures, the neighborhood
+    # pass) live until the candidate stage is materialized
+    with cache_scope():
+        candidate_pairs = generate_candidates(pv, cfg, minhash_sigs=minhash_sigs)
+        if cfg.checkpoint_dir:
+            _checkpoint(candidate_pairs, f"{cfg.checkpoint_dir}/stage1_candidates")
+            candidate_pairs = files.sparkSession.read.parquet(
+                f"{cfg.checkpoint_dir}/stage1_candidates"
+            )
+        else:
+            candidate_pairs = keep(persist(candidate_pairs))
+            candidate_pairs.count()
 
     scored = scoring.score_candidates(candidate_pairs, pv, cfg.scoring)
     if cfg.checkpoint_dir:
         _checkpoint(scored, f"{cfg.checkpoint_dir}/stage2_scored")
         scored = files.sparkSession.read.parquet(f"{cfg.checkpoint_dir}/stage2_scored")
     else:
-        scored = scored.persist()
+        scored = persist(scored)
 
-    matched = scoring.matched_pairs(scored).persist()
+    matched = persist(scoring.matched_pairs(scored))
     assignment = public_assignment(
         clustering.connected_components(
             matched,
@@ -307,13 +309,13 @@ def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[st
     # singletons: files that matched nothing keep their own id — ONE
     # left join + coalesce over the feature ids (round 6; the anti-join
     # + union form walked the feature table twice for the same rows)
-    all_assign = (
+    all_assign = persist(
         features.select(F.col("file_id").alias("member_id"))
         .join(assignment, "member_id", "left")
         .withColumn(
             "entity_id", F.coalesce(F.col("entity_id"), F.col("member_id"))
         )
-    ).persist()
+    )
     ranked = rank_survivors(
         features.join(
             all_assign, features["file_id"] == all_assign["member_id"]

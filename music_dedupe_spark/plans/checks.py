@@ -1,8 +1,8 @@
 """Physical-plan assertions (SURVEY §4): the 100 TB checklist encoded
 as testable predicates — filters pushed to the parquet scan, column
-pruning in ReadSchema, broadcast joins where a side is small, and
-whole-stage codegen coverage. Used by tests/test_plans.py so a plan
-regression fails CI, not a cluster run."""
+pruning in ReadSchema, and broadcast joins where a side is small. Used
+by tests/test_plans.py so a plan regression fails CI, not a cluster
+run."""
 
 from __future__ import annotations
 
@@ -80,7 +80,3 @@ def exchanges(df: DataFrame) -> list[dict]:
             }
         )
     return out
-
-
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    return explain_str(df).count("WholeStageCodegen")

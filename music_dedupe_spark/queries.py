@@ -21,6 +21,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from music_dedupe_spark.session import cache_scope
+
 Query = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, tuple[Query, str | None]] = {}
@@ -1001,24 +1003,20 @@ def _deterministic_edges(spark, sf) -> DataFrame:
     from music_dedupe_spark.operators.dedup import ngram_jaccard_pairs
 
     d = _t(spark, sf, "documents")
-    jac_pairs = ngram_jaccard_pairs(d)
-    jac_edges = jac_pairs.select(
-        F.col("left_doc").alias("left_id"), F.col("right_doc").alias("right_id")
-    )
     content_edges = blocking.content_sha_star(
         d.select(
             F.sha2("text", 256).alias("content_sha256"), F.col("doc_id").alias("file_id")
         )
     ).select("left_id", "right_id")
     # materialize the (tiny) edge list eagerly, then release the ~10x-text
-    # shingle cache ngram_jaccard_pairs persisted — the CC loop and the
-    # caller's collect would otherwise keep re-reading (and the lineage
-    # cut also stops connected_components' all-nodes union from
-    # recomputing the shingle join after the unpersist).
-    edges = jac_edges.unionByName(content_edges).localCheckpoint()
-    for _d in getattr(jac_pairs, "_mds_persisted", []):
-        _d.unpersist()
-    return edges
+    # shingle caches ngram_jaccard_pairs persisted — the lineage cut also
+    # stops connected_components' all-nodes union from recomputing the
+    # shingle join after the release
+    with cache_scope():
+        jac_edges = ngram_jaccard_pairs(d).select(
+            F.col("left_doc").alias("left_id"), F.col("right_doc").alias("right_id")
+        )
+        return jac_edges.unionByName(content_edges).localCheckpoint()
 
 
 def _multi_member_summary(assignment: DataFrame) -> DataFrame:

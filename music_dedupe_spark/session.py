@@ -1,18 +1,30 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the lifetime
+of every cache the engine takes.
 
 The reference tunes SQLite PRAGMAs and a 4-thread pool
 (/root/reference/app/core.py:42,144-146); our equivalents are explicit
 shuffle-partition control, AQE (runtime coalescing + skew-join splitting),
 and Arrow batching for the vectorized-UDF path — the three knobs the
 north rule requires to be explicit.
+
+Cache lifetimes: every persist in the package goes through ``persist``,
+which registers the frame in the innermost open ``cache_scope``; the
+scope unpersists its frames on exit. A frame that must outlive the
+scope it was built in is handed to the enclosing one with ``keep``.
+With no scope open, a persist lives for the session. A plan that is
+already cached stays with the owner that cached it first.
 """
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import os
 import sys
+from collections.abc import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 #: Share of the host's MemTotal given to the driver heap (in local mode
 #: the driver JVM is the only JVM). The JVM's resident size runs a few GB
@@ -119,3 +131,55 @@ def _ship_package(spark: SparkSession) -> None:
                         z.write(full, rel)
         os.replace(zip_path + ".tmp", zip_path)
     spark.sparkContext.addPyFile(zip_path)
+
+
+#: The open cache scopes of the current thread, innermost last. Each
+#: thread starts with none, so a scope opened on a worker thread (the
+#: LSH canary pass) never collects the main thread's frames.
+_SCOPES: contextvars.ContextVar[tuple[list[DataFrame], ...]] = contextvars.ContextVar(
+    "cache_scopes", default=()
+)
+
+
+@contextlib.contextmanager
+def cache_scope() -> Iterator[None]:
+    """Unpersist, on exit (also on error), every frame ``persist``
+    cached inside the block and did not ``keep``."""
+    frames: list[DataFrame] = []
+    token = _SCOPES.set(_SCOPES.get() + (frames,))
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+        for df in frames:
+            df.unpersist()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist(MEMORY_AND_DISK)``, owned by the innermost open
+    ``cache_scope`` (by the session when none is open).
+
+    Spark keys a cache by its plan, so a frame whose plan is already
+    cached shares that cache: it stays with its first owner, and this
+    scope neither registers nor releases it."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1].append(df)
+    return df
+
+
+def keep(df: DataFrame) -> DataFrame:
+    """Hand a frame ``persist`` cached in the innermost scope to the
+    enclosing scope (to the session when there is none), so it outlives
+    the scope it was built in. A frame the innermost scope does not own
+    is left with its owner."""
+    scopes = _SCOPES.get()
+    if scopes and any(f is df for f in scopes[-1]):
+        frames = scopes[-1]
+        frames[:] = [f for f in frames if f is not df]
+        if len(scopes) > 1:
+            scopes[-2].append(df)
+    return df

@@ -14,6 +14,7 @@ from music_dedupe_spark.operators.dedup import (
     simhash_batch,
     simhash_tokens,
 )
+from music_dedupe_spark.session import cache_scope
 
 
 def test_md5_token_hash_matches_duckdb_md5_number_upper():
@@ -114,11 +115,8 @@ def test_lsh_truth_set_nonempty(spark):
     # separate agg sees (round-6: one driver job instead of two)
     assert n_docs == stats["n"]
     assert total_chars == stats["chars"]
-    t = ngram_jaccard_pairs(d, k=5, threshold=LSH_TRUTH_JACCARD)
-    deps = getattr(t, "_mds_persisted", [])
-    n = t.count()
-    for dep in deps:
-        dep.unpersist()
+    with cache_scope():
+        n = ngram_jaccard_pairs(d, k=5, threshold=LSH_TRUTH_JACCARD).count()
     assert n > 0
 
 def test_lsh_canaries_side_effect_free_on_hot_buckets(spark, tmp_path):
@@ -165,22 +163,20 @@ def test_lsh_canaries_side_effect_free_on_hot_buckets(spark, tmp_path):
     sf = str(tmp_path / "hotsf")
     d.write.parquet(f"{sf}/documents.parquet")
 
-    pure = minhash_lsh_pairs(
-        d.select(
-            F.col("doc_id").cast("string").alias("file_id"),
-            F.col("text").alias("content"),
-        ),
-        num_perm=128,
-        bands=32,
-        shingle_k=5,
-    )
-    deps = getattr(pure, "_mds_persisted", [])
-    want = {
-        tuple(sorted((int(r["left_id"]), int(r["right_id"]))))
-        for r in pure.select("left_id", "right_id").collect()
-    }
-    for dep in deps:
-        dep.unpersist()
+    with cache_scope():
+        pure = minhash_lsh_pairs(
+            d.select(
+                F.col("doc_id").cast("string").alias("file_id"),
+                F.col("text").alias("content"),
+            ),
+            num_perm=128,
+            bands=32,
+            shingle_k=5,
+        )
+        want = {
+            tuple(sorted((int(r["left_id"]), int(r["right_id"]))))
+            for r in pure.select("left_id", "right_id").collect()
+        }
     # the identical-doc block went through the star path — the
     # scenario under test
     assert any(u < 210 and v < 210 for u, v in want)

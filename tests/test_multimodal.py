@@ -1,51 +1,9 @@
-"""Multimodal binary-column plumbing: schema, batch shape, determinism,
-stub gating (SURVEY S12 + builder multimodal requirement)."""
+"""Side-output artifacts: the reference's .nfo/.jpg/folder.jpg writes
+as a derived table (SURVEY S12)."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from music_dedupe_spark.operators.multimodal import (
-    FEATURE_DIM,
-    MEDIA_SCHEMA,
-    extract_media_features,
-    frame_sample_plan,
-    side_output_artifacts,
-)
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    rows = [
-        ("m1", "image", b"\x89PNG fake bytes", ("image/png", 640, 480, None)),
-        ("m2", "audio", b"ID3 fake mp3 bytes", ("audio/mpeg", None, None, 180_000)),
-        ("m3", "video", b"\x00\x00ftyp fake", ("video/mp4", 1920, 1080, 4_500)),
-        ("m4", "image", None, ("image/png", 1, 1, None)),
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_extract_features_shape_and_determinism(spark, media):
-    out1 = extract_media_features(media).orderBy("media_id").collect()
-    out2 = extract_media_features(media.repartition(3)).orderBy("media_id").collect()
-    assert [r["media_id"] for r in out1] == ["m1", "m2", "m3", "m4"]
-    for r1, r2 in zip(out1, out2):
-        assert len(r1["features"]) == FEATURE_DIM
-        assert r1["features"] == r2["features"]  # partitioning-independent
-    assert out1[0]["n_bytes"] == 15
-
-
-def test_decode_stub_gate(spark, media):
-    with pytest.raises(Exception) as e:
-        extract_media_features(media, decode_stub=False).collect()
-    assert "NotImplementedError" in str(e.value) or "codecs unavailable" in str(e.value)
-
-
-def test_frame_sample_plan(spark, media):
-    plan = frame_sample_plan(media, every_ms=1000).collect()
-    # 4.5s video -> 4 frames at 0,1000,2000,3000
-    assert [(r["frame_idx"], r["offset_ms"]) for r in plan] == [
-        (0, 0), (1, 1000), (2, 2000), (3, 3000),
-    ]
+from music_dedupe_spark.operators.multimodal import side_output_artifacts
 
 
 def test_side_output_artifacts(spark, files_df):
