@@ -15,13 +15,17 @@ Candidate generation only pairs ``new × (new ∪ existing)``:
   independent of corpus size: blocking keys of the existing side are
   pre-filtered to keys present in the new batch (a broadcast semi-join
   when the batch is small — the common case), so the big side is
-  scanned once and pruned early. The sorted-neighborhood channel is
-  the exception: group heads depend on the global key order, so each
-  delta re-runs the (narrow, two-column) range-sort pass over the full
-  old ∪ new corpus — one O(corpus) narrow shuffle per delta, gated by
+  scanned once and pruned early. Each of these channels is the batch
+  channel itself (``blocking.block_pairs`` underneath) run over the
+  pruned rows, followed by one new-touching filter: a single pass with
+  two broadcast left joins on the new id set, no union and no extra
+  shuffle. The sorted-neighborhood channel is the exception: group
+  heads depend on the global key order, so each delta re-runs the
+  (narrow, two-column) range-sort pass over the full old ∪ new corpus —
+  one O(corpus) narrow shuffle per delta, gated by
   ``cfg.rungroup_max_rows`` exactly like the batch pipeline; for
-  high-frequency small deltas where LSH recall suffices, raise the
-  gate out of reach (or set the cfg threshold to 0 rows) to skip it.
+  high-frequency small deltas where LSH recall suffices, set that gate
+  to 0 rows to skip it.
 
 Exactness: running ``incremental_link`` over a delta produces the SAME
 clusters as re-running the full pipeline over old ∪ new
@@ -41,10 +45,11 @@ these per-channel arguments:
 - sorted-neighborhood: run-group heads depend on global key order, so a
   new key can regroup old×old neighbors downstream of it. The delta
   therefore re-runs the (narrow, two-column) global neighborhood pass
-  over old ∪ new and keeps every pair not already inside one existing
-  entity — same-entity pairs are union-redundant in CC, so dropping
-  them is cluster-exact while keeping the re-scored volume near the
-  delta's neighborhood.
+  over old ∪ new — the batch pipeline's own ``rungroup_channel``, whose
+  run groups are ``block_pairs`` blocks — and keeps every pair not
+  already inside one existing entity — same-entity pairs are
+  union-redundant in CC, so dropping them is cluster-exact while
+  keeping the re-scored volume near the delta's neighborhood.
 - MinHash-LSH: signatures are deterministic per content and read from
   the ``existing_signatures`` store (only the delta's content is
   hashed — O(|new|), the VERDICT r2 gap); kept pairs are new-touching.
@@ -68,41 +73,32 @@ from music_dedupe_spark.session import cache_scope, keep, persist
 
 
 def _touching_new(pairs: DataFrame, new_feats: DataFrame) -> DataFrame:
-    """Keep only pairs with at least one NEW member (broadcast semi-
-    joins on the small new-batch id set)."""
-    new_ids = new_feats.select("file_id")
-    keep_l = pairs.join(
-        F.broadcast(new_ids.withColumnRenamed("file_id", "left_id")), "left_id", "left_semi"
+    """Keep only pairs with at least one NEW member: one pass over
+    ``pairs``, two broadcast left joins that flag each side against the
+    small new-batch id set, and a filter. Duplicate new ids can repeat a
+    pair; the candidate union dedups on the pair key anyway."""
+    nl = new_feats.select(F.col("file_id").alias("left_id"), F.lit(True).alias("_nl"))
+    nr = new_feats.select(F.col("file_id").alias("right_id"), F.lit(True).alias("_nr"))
+    return (
+        pairs.join(F.broadcast(nl), "left_id", "left")
+        .join(F.broadcast(nr), "right_id", "left")
+        .filter(F.col("_nl").isNotNull() | F.col("_nr").isNotNull())
+        .select(*pairs.columns)
     )
-    keep_r = pairs.join(
-        F.broadcast(new_ids.withColumnRenamed("file_id", "right_id")), "right_id", "left_semi"
-    )
-    return keep_l.unionByName(keep_r).dropDuplicates(["left_id", "right_id"])
 
 
-def _delta_exact_key_pairs(
-    new_feats: DataFrame, all_feats: DataFrame, cap: int = 64
+def _delta_block_channel(
+    channel, key_col: str, new_feats: DataFrame, all_feats: DataFrame, **kw
 ) -> DataFrame:
-    """exact-key channel restricted to blocks that contain >= 1 new
-    file: the existing side is pruned by a broadcast semi-join on the
-    new batch's (typically small) key set, then the SAME cap-and-star
-    machinery as the batch channel bounds hot blocks, and only
-    new-touching pairs survive (old×old connectivity lives in the
-    existing assignment)."""
-    new_keys = new_feats.select("norm_name").distinct()
-    pruned = all_feats.join(F.broadcast(new_keys), "norm_name", "left_semi")
-    return _touching_new(blocking.exact_key_pairs(pruned, cap=cap), new_feats)
-
-
-def _delta_content_star(new_feats: DataFrame, all_feats: DataFrame) -> DataFrame:
-    """content-sha channel: link each new file to the minimum file_id of
-    its sha group across the WHOLE corpus — the batch channel over the
-    sha groups pruned (broadcast semi-join) to those containing a new
-    file. Old→root links inside a touched group duplicate closure the
-    existing assignment already has, so only new-touching edges stay."""
-    new_shas = new_feats.select("content_sha256").distinct()
-    pruned = all_feats.join(F.broadcast(new_shas), "content_sha256", "left_semi")
-    return _touching_new(blocking.content_sha_star(pruned), new_feats)
+    """A keyed batch channel over the delta: the whole corpus is pruned
+    (broadcast semi-join) to the blocks whose ``key_col`` occurs in the
+    new batch, ``channel`` runs over them with the batch pipeline's own
+    caps and star, and only new-touching pairs stay (old×old
+    connectivity lives in the existing assignment). The pruning keeps
+    WHOLE blocks, so a touched block pairs exactly as in a full run."""
+    new_keys = new_feats.select(key_col).distinct()
+    pruned = all_feats.join(F.broadcast(new_keys), key_col, "left_semi")
+    return _touching_new(channel(pruned, **kw), new_feats)
 
 
 def _not_same_entity(pairs: DataFrame, assignment: DataFrame) -> DataFrame:
@@ -283,9 +279,15 @@ def incremental_link(
     # the channels' own caches (banded LSH signatures, the neighborhood
     # pass) live until the candidate stage is materialized
     with cache_scope():
+        # the channels are looked up on the module here, at call time,
+        # so a wrapper installed on blocking (a tracer) sees these calls
         channels = [
-            _delta_content_star(pv_new, pv_all),
-            _delta_exact_key_pairs(pv_new, pv_all, cap=cfg.block_cap),
+            _delta_block_channel(
+                blocking.content_sha_star, "content_sha256", pv_new, pv_all
+            ),
+            _delta_block_channel(
+                blocking.exact_key_pairs, "norm_name", pv_new, pv_all, cap=cfg.block_cap
+            ),
         ]
 
         # sorted-neighborhood channel (module docstring: group heads shift
@@ -294,11 +296,8 @@ def incremental_link(
         # is narrow — (key, id) only, one range shuffle. ONE shared
         # implementation with the batch pipeline (pipeline.rungroup_channel)
         # so gate/threshold/sizing can never drift between the two paths.
-        # The gate size is all_feats' OWN count — cfg.n_rows_hint must not
-        # be reused here: run_pipeline mutates it to the OLD corpus size,
-        # and gating old ∪ new on |old| would run the non-scaling channel
-        # past its ceiling (and diverge from what a full rerun does). The
-        # count also materializes the all_feats persist.
+        # The gate size is the count of old ∪ new, as a full rerun would
+        # take it; the count also materializes the all_feats persist.
         from music_dedupe_spark.pipeline import rungroup_channel
 
         rg_pairs = rungroup_channel(pv_all, cfg, all_feats.count())

@@ -28,7 +28,8 @@ Scale: the data shuffles once (the range partition); each fixpoint
 round touches only cached partitions; the driver holds O(P) carries,
 never rows. Hot identical keys concentrate in one partition but form a
 single run-group either way (fuzz of equal keys = 100) — the quadratic
-pair blow-up is bounded downstream (group_pairs cap), not here.
+pair blow-up is bounded downstream, where ``pipeline.rungroup_channel``
+hands the groups to ``blocking.block_pairs`` as blocks, not here.
 """
 
 from __future__ import annotations
@@ -76,14 +77,13 @@ def sorted_run_groups(
     id_col: str = "file_id",
     threshold: int = DEFAULT_THRESHOLD,
     num_partitions: int | None = None,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """Assign run-group ids over the global key sort order — exact
     reproduction of the reference pass at any partition count.
 
     Returns ``(id_col, key_col, group_id)`` where ``group_id`` is the id
     of the group-head row (globally unique, deterministic). Groups of
-    size 1 are non-candidates; callers filter via ``candidate_groups``.
+    size 1 are non-candidates: as blocks of one row they pair nothing.
 
     Scale ceiling (documented, gated): the carry-propagation fixpoint
     collects one summary row per partition per round — with ~50k-row
@@ -175,9 +175,8 @@ def sorted_run_groups(
             .withColumn("_pid", F.spark_partition_id())
         )
         carries: dict[int, tuple] = {}
-        rounds = max_rounds or n + 1
         result = None
-        for rnd in range(rounds):
+        for rnd in range(n + 1):
             result = persist(parted.mapInPandas(make_pass(carries), schema=schema))
             outs = {}
             firsts = {}
@@ -212,48 +211,3 @@ def sorted_run_groups(
         F.col("_head").alias("group_id"),
     )
     return out
-
-
-def _group_counts(run_groups: DataFrame) -> DataFrame:
-    """Per-group row counts via groupBy (AQE-splittable partial agg), NOT
-    a window: ``count(*) OVER (PARTITION BY group_id)`` pins each group to
-    one task, so a single hot run-group (identical keys all fuzz to 100)
-    serializes the stage — the same straggler pattern fixed in
-    blocking.py/dedup.py block-size counts."""
-    return run_groups.groupBy("group_id").agg(F.count("*").alias("_n"))
-
-
-def candidate_groups(run_groups: DataFrame) -> DataFrame:
-    """Filter to groups of size > 1 (reference emits only those,
-    core.py:700-705). Output: (file_id, norm_name, group_id)."""
-    multi = _group_counts(run_groups).filter(F.col("_n") > 1).select("group_id")
-    return run_groups.join(multi, "group_id", "left_semi").select(
-        "file_id", "norm_name", "group_id"
-    )
-
-
-def group_pairs(run_groups: DataFrame, max_group_size: int = 50) -> DataFrame:
-    """Candidate pairs within each run-group: all-pairs for small groups,
-    plus head-star edges for every group (star keeps connectivity O(n)
-    on hot groups — the quadratic bound the north rule requires).
-    Output (left_id, right_id)."""
-    counts = _group_counts(run_groups).filter(F.col("_n") > 1)
-    multi = counts.select("group_id")
-    sized = run_groups.join(multi, "group_id", "left_semi")
-    l = sized.select(F.col("group_id"), F.col("file_id").alias("left_id"))
-    r = sized.select(F.col("group_id"), F.col("file_id").alias("right_id"))
-    small = counts.filter(F.col("_n") <= max_group_size).select("group_id")
-    all_pairs = (
-        l.join(r, "group_id")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .join(F.broadcast(small), "group_id", "left_semi")
-    )
-    star = sized.filter(F.col("file_id") != F.col("group_id")).select(
-        F.least("file_id", "group_id").alias("left_id"),
-        F.greatest("file_id", "group_id").alias("right_id"),
-    )
-    return (
-        all_pairs.select("left_id", "right_id")
-        .unionByName(star)
-        .dropDuplicates(["left_id", "right_id"])
-    )

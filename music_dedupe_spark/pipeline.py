@@ -47,8 +47,6 @@ class PipelineConfig:
     shingle_k: int = 7
     checkpoint_dir: str | None = None
     resume: bool = False
-    # set by run_pipeline (features.count()); callers may pre-set to skip
-    n_rows_hint: int | None = None
     # assert that the 64-bit internal ids (fid = xxhash64(file_id)) are
     # collision-free for this corpus (one extra countDistinct agg over
     # the narrow fid column). Default off: expected collisions are
@@ -169,29 +167,32 @@ def rungroup_channel(
         threshold=cfg.rungroup_threshold,
         num_partitions=rg_parts,
     )
-    return (
-        rungroup.group_pairs(rg, max_group_size=cfg.block_cap)
-        .withColumn("channel", F.lit("sorted_neighborhood"))
-        .select("left_id", "right_id", "channel")
-    )
+    # each run group is a block: all pairs up to the cap, a star to the
+    # group's minimum id over it (one hot run of identical keys stays
+    # linear, like every other channel's hot blocks)
+    keyed = rg.select(F.col("group_id").alias("_bk"), "file_id")
+    return blocking.block_pairs(keyed, cfg.block_cap, "sorted_neighborhood")
 
 
 def generate_candidates(
-    features: DataFrame, cfg: PipelineConfig, minhash_sigs: DataFrame | None = None
+    features: DataFrame,
+    cfg: PipelineConfig,
+    minhash_sigs: DataFrame | None = None,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Union of the three blocking channels + the sorted-neighborhood
     run-group channel (J1). Output (left_id, right_id, channel).
     ``minhash_sigs``: optional precomputed (file_id, sig) signatures for
-    the LSH channel (run_pipeline passes its signature store)."""
+    the LSH channel (run_pipeline passes its signature store).
+    ``n_rows``: the row count of ``features``, which gates the
+    sorted-neighborhood channel (run_pipeline passes the count it already
+    took)."""
     channels = [
         blocking.content_sha_star(features),
         blocking.exact_key_pairs(features, cap=cfg.block_cap),
     ]
-    # An unset hint is COUNTED, not assumed small — skipping the gate for
-    # unknown sizes would default huge corpora into the non-scaling
-    # channel (run_pipeline always pre-sets the hint; this count only
-    # fires for direct generate_candidates callers).
-    n_rows = cfg.n_rows_hint
+    # An unknown size is COUNTED, not assumed small — skipping the gate
+    # would default huge corpora into the non-scaling channel.
     if n_rows is None:
         n_rows = features.count()
     rg = rungroup_channel(features, cfg, n_rows)
@@ -227,8 +228,7 @@ def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[st
         # loop, survivorship) re-reads features: persist once
         features = persist(features)
 
-    if cfg.n_rows_hint is None:
-        cfg.n_rows_hint = features.count()  # also materializes the persist
+    n_rows = features.count()  # also materializes the persist
     if cfg.check_fid_collisions:
         r = features.agg(
             F.count("*").alias("n"), F.count_distinct("fid").alias("d")
@@ -280,7 +280,9 @@ def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[st
     # the channels' own caches (banded LSH signatures, the neighborhood
     # pass) live until the candidate stage is materialized
     with cache_scope():
-        candidate_pairs = generate_candidates(pv, cfg, minhash_sigs=minhash_sigs)
+        candidate_pairs = generate_candidates(
+            pv, cfg, minhash_sigs=minhash_sigs, n_rows=n_rows
+        )
         if cfg.checkpoint_dir:
             _checkpoint(candidate_pairs, f"{cfg.checkpoint_dir}/stage1_candidates")
             candidate_pairs = files.sparkSession.read.parquet(

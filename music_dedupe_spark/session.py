@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import contextlib
 import contextvars
+import hashlib
 import os
 import sys
 from collections.abc import Iterator
@@ -82,10 +83,7 @@ def get_spark(
         # pass instead of defaulting to sort-merge (no sort pass; the
         # blocking layer caps partition-level build sides, and AQE's
         # skew handling still applies) — guide-recommended baseline.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # scalar @udf hops (none on data paths, but entry glue) cross
         # as Arrow batches instead of pickled rows
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
@@ -113,9 +111,7 @@ def _ship_package(spark: SparkSession) -> None:
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), "music_dedupe_spark_pyfiles.zip"
-    )
+    zip_path = _package_zip_path(pkg_dir)
     if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < max(
         (os.path.getmtime(os.path.join(r, f)) for r, _, fs in os.walk(pkg_dir) for f in fs),
         default=0,
@@ -131,6 +127,16 @@ def _ship_package(spark: SparkSession) -> None:
                         z.write(full, rel)
         os.replace(zip_path + ".tmp", zip_path)
     spark.sparkContext.addPyFile(zip_path)
+
+
+def _package_zip_path(pkg_dir: str) -> str:
+    """Where the zip of the package at ``pkg_dir`` is built: one file
+    per checkout (a short hash of its directory), so a session never
+    ships another checkout's code to its workers."""
+    tag = hashlib.sha256(pkg_dir.encode()).hexdigest()[:12]
+    return os.path.join(
+        os.environ.get("TMPDIR", "/tmp"), f"music_dedupe_spark_pyfiles_{tag}.zip"
+    )
 
 
 #: The open cache scopes of the current thread, innermost last. Each

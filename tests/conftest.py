@@ -13,7 +13,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("music_dedupe_spark_tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("music_dedupe_spark_tests")
     yield s
 
 

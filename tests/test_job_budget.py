@@ -13,7 +13,7 @@ Queries count the same on every run. Jobs do too, except in a query
 that runs many AQE query stages at once, where the number of stage jobs
 moves between runs on the same input: the one query of exact_key_pairs
 (13-14 jobs) and of minhash_lsh_pairs (15-16), and the candidate query
-of incremental_link (185-191 jobs in all). Their jobs are not bounded;
+of incremental_link (125-126 jobs in all). Their jobs are not bounded;
 their queries are.
 """
 
@@ -39,8 +39,8 @@ from music_dedupe_spark.session import cache_scope, persist
 #: work; raising one is a regression that needs a stated reason.
 JOB_CEILINGS = {
     "content_sha_star": 4,
-    "rungroup_channel": 10,
-    "run_pipeline": 82,
+    "rungroup_channel": 9,
+    "run_pipeline": 81,
     "connected_components": 28,
 }
 

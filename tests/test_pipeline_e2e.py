@@ -89,6 +89,7 @@ def test_determinism_under_parallelism(spark, files_df, labeled_pairs_df, result
     # FIXTURES.md §5.5: same clusters with a different shuffle layout
     cfg = PipelineConfig()
     with_other_parallelism = run_pipeline(files_df.repartition(3), cfg)
+    assert cfg == PipelineConfig()  # the caller's config is not written to
     a = {(r["member_id"], r["entity_id"]) for r in result["clusters"].collect()}
     b = {(r["member_id"], r["entity_id"]) for r in with_other_parallelism["clusters"].collect()}
     assert a == b

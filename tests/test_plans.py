@@ -43,17 +43,6 @@ def test_broadcast_join_small_dim(spark, sf_dir):
     assert has_broadcast_join(j)
 
 
-def test_group_pairs_small_side_broadcast(spark):
-    # the run-group small-groups semi-join is explicitly broadcast
-    from music_dedupe_spark.operators.rungroup import group_pairs, sorted_run_groups
-
-    df = spark.createDataFrame(
-        [("kkkkkkkk", f"id{i}") for i in range(6)], "norm_name string, file_id string"
-    )
-    pairs = group_pairs(sorted_run_groups(df, num_partitions=2))
-    assert has_broadcast_join(pairs)
-
-
 def test_scoring_cascade_joins_broadcast_when_features_small(spark, files_df):
     """The 3-join featureization must plan as broadcast hash joins (no
     sort-merge, no pair-side shuffle) when the feature table is small —
@@ -207,5 +196,25 @@ def test_keyed_channel_plans_one_block_aggregate(spark, files_df, channel, n_exc
         roots = [e for e in bk if "min" in e["cols"]]
         assert len(roots) == 1 and "count" in roots[0]["cols"], bk
         assert len(exs) == n_exchanges, [(sorted(e["cols"]), e["args"]) for e in exs]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_touching_new_adds_no_exchange(spark, files_df):
+    """incremental_link keeps a delta channel's new-touching pairs with
+    two broadcast joins over ONE copy of the channel's plan: no shuffle
+    is added, and the channel is not planned twice."""
+    from music_dedupe_spark.operators import blocking
+    from music_dedupe_spark.operators.incremental_er import _touching_new
+    from music_dedupe_spark.pipeline import ingest, pair_view
+    from music_dedupe_spark.plans.checks import exchanges
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pv = pair_view(ingest(files_df))
+        pairs = blocking.exact_key_pairs(pv)
+        new = pv.filter(F.pmod(F.col("file_id"), F.lit(7)) == 0)
+        assert len(exchanges(_touching_new(pairs, new))) == len(exchanges(pairs))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

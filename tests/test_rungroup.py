@@ -8,12 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from music_dedupe_spark.functions.text import with_derived_columns
-from music_dedupe_spark.operators.rungroup import (
-    candidate_groups,
-    group_pairs,
-    rungroup_sequential,
-    sorted_run_groups,
-)
+from music_dedupe_spark.operators.rungroup import rungroup_sequential, sorted_run_groups
+from music_dedupe_spark.pipeline import PipelineConfig, rungroup_channel
 
 
 def _oracle_groups(rows):
@@ -70,22 +66,32 @@ def test_boundary_merge_across_partitions(spark):
     assert got == want
 
 
+def _channel_pairs(spark, rows, cfg):
+    df = spark.createDataFrame(rows, "norm_name string, file_id string")
+    out = rungroup_channel(df, cfg, len(rows)).collect()
+    assert {r["channel"] for r in out} <= {"sorted_neighborhood"}
+    return sorted((r["left_id"], r["right_id"]) for r in out)
+
+
 def test_candidate_groups_filters_singletons(spark):
-    df = spark.createDataFrame(
-        [("alphaalpha", "a1"), ("alphaalphb", "a2"), ("omega", "z1")],
-        "norm_name string, file_id string",
-    )
-    rg = sorted_run_groups(df, num_partitions=2)
-    cands = candidate_groups(rg)
-    ids = {r["file_id"] for r in cands.collect()}
-    assert ids == {"a1", "a2"}  # omega is a singleton -> not a candidate
+    rows = [("alphaalpha", "a1"), ("alphaalphb", "a2"), ("omega", "z1")]
+    got = _channel_pairs(spark, rows, PipelineConfig())
+    assert got == [("a1", "a2")]  # omega is a singleton -> pairs nothing
 
 
 def test_group_pairs_shape(spark):
-    df = spark.createDataFrame(
-        [("k", f"id{i}") for i in range(5)], "norm_name string, file_id string"
-    )
-    pairs = group_pairs(sorted_run_groups(df, num_partitions=2)).collect()
-    assert len(pairs) == 10  # C(5,2) all-pairs for a small group
-    for r in pairs:
-        assert r["left_id"] < r["right_id"]
+    rows = [("k", f"id{i}") for i in range(5)]
+    got = _channel_pairs(spark, rows, PipelineConfig())
+    assert len(got) == 10  # C(5,2) all-pairs for a small group
+    assert all(l < r for l, r in got)
+
+
+def test_rungroup_channel_blocks(spark):
+    """Each run group is a ``block_pairs`` block. A group over the cap
+    is a star to its MINIMUM id, the root every channel uses, even where
+    the group's head (its first key in sort order) is another row."""
+    # fuzz("alphaalpha", "alphaalph?") = 90 > 85: one group of 3 headed
+    # by "b" (the smallest key), over a cap of 2
+    mixed = [("alphaalpha", "b"), ("alphaalphb", "a"), ("alphaalphc", "c")]
+    got = _channel_pairs(spark, mixed, PipelineConfig(block_cap=2))
+    assert got == [("a", "b"), ("a", "c")]

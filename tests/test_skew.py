@@ -147,8 +147,8 @@ def test_rungroup_channel_gated_by_corpus_size(spark):
     feats = ingest(spark.read.parquet(f"{d}/files.parquet")).persist()
     n = feats.count()
 
-    small_cfg = PipelineConfig(n_rows_hint=n)
-    big_cfg = PipelineConfig(n_rows_hint=n, rungroup_max_rows=n - 1)
+    small_cfg = PipelineConfig()
+    big_cfg = PipelineConfig(rungroup_max_rows=n - 1)
     ch_small = {
         r["channel"]
         for r in generate_candidates(feats, small_cfg).select("channel").distinct().collect()
