@@ -61,6 +61,7 @@ def _run_pipeline(spark, sf_dir):
 
 
 def run_bench(cpus: str, sf_dir: str) -> dict:
+    from music_dedupe_spark.operators import blocking
     from music_dedupe_spark.session import get_spark
 
     spark = get_spark("bench", cpus=cpus)
@@ -122,8 +123,8 @@ def run_bench(cpus: str, sf_dir: str) -> dict:
             "arrow.maxRecordsPerBatch": spark.conf.get(
                 "spark.sql.execution.arrow.maxRecordsPerBatch"
             ),
-            "block_cap": 64,
-            "minhash": "128 perms / 32 bands",
+            "block_cap": blocking.BLOCK_CAP,
+            "minhash": f"{blocking.NUM_PERM} perms / {blocking.BANDS} bands",
         },
     }
 

@@ -76,6 +76,17 @@ def levenshtein_distance(a: str, b: str) -> int:
     return int(prev[lb])
 
 
+#: The reference's fuzzy-match rule, ``fuzz.ratio > 85`` (its
+#: core.py:697): run-grouping joins and the scorer's gate both compare
+#: ``fuzz_ratio`` against it.
+FUZZ_THRESHOLD = 85
+
+#: Jaro-Winkler is only decision-relevant alongside a high norm_lev (the
+#: is_dup rule needs norm_lev >= scoring.MIN_NORM_LEV), so the
+#: python-loop JW runs only where norm_lev clears this lower margin.
+JW_GATE_LEV = 0.8
+
+
 def fuzz_ratio(a: str | None, b: str | None) -> int:
     """thefuzz.fuzz.ratio parity (0-100 int). Both-empty -> 100, matching
     Levenshtein.ratio('','') == 1.0."""
@@ -165,19 +176,6 @@ def token_set_jaccard(a_tokens, b_tokens) -> float:
 # 'utils'); computing each distinct pair once is a 10-100x win that holds
 # at any scale because it is per-Arrow-batch, not global state.
 # ---------------------------------------------------------------------------
-
-
-def _dedup_apply(a: pd.Series, b: pd.Series, fn, dtype):
-    key = pd.DataFrame({"a": a.fillna(""), "b": b.fillna("")})
-    uniq = key.drop_duplicates()
-    vals = [fn(x, y) for x, y in zip(uniq["a"], uniq["b"])]
-    lut = pd.Series(vals, index=pd.MultiIndex.from_frame(uniq))
-    out = lut.reindex(pd.MultiIndex.from_frame(key)).to_numpy()
-    return pd.Series(out, index=a.index).astype(dtype)
-
-
-def fuzz_ratio_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _dedup_apply(a, b, fuzz_ratio, "int32")
 
 
 def _pad_codes(strs: list[str]) -> tuple[np.ndarray, np.ndarray]:
@@ -281,18 +279,13 @@ def _dp_from_codes(
 
 
 def name_scores_arrays(
-    av: np.ndarray, bv: np.ndarray, jw_gate_lev: float = 0.8
+    av: np.ndarray, bv: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All three name-similarity kernels in ONE pass over the DISTINCT
     (a, b) pairs of the batch: factorize-based dedup, batched-DP kernels
     over the unique pairs. Inputs are object arrays of (non-null)
-    strings; returns (fuzz int32, jw float64, norm_lev float64).
-
-    ``jw_gate_lev``: Jaro-Winkler is only decision-relevant alongside
-    norm_lev >= cfg.min_norm_lev, so the (python-loop) JW is computed
-    only where norm_lev clears this margin; callers with a custom
-    min_norm_lev below the 0.8 default must pass
-    min(0.8, cfg.min_norm_lev) (score_candidates does)."""
+    strings; returns (fuzz int32, jw float64, norm_lev float64); jw is
+    NaN where norm_lev < ``JW_GATE_LEV``."""
     # tuple keys force pandas' PyObject hash table — the string-key path
     # (a + sep + b) routes to a C-string table that TRUNCATES AT NUL
     # bytes (found by hypothesis: '\x000' vs '0' collided)
@@ -315,16 +308,14 @@ def name_scores_arrays(
             lensum > 0, np.round(100.0 * (lensum - indel) / np.where(lensum > 0, lensum, 1)), 100.0
         ).astype(np.int32)
         lev_u = np.where(maxlen > 0, 1.0 - lev / np.where(maxlen > 0, maxlen, 1), 1.0)
-    # JW is decision-relevant only alongside high norm_lev (the is_dup
-    # rule requires BOTH jw >= 0.88 and norm_lev >= 0.86): compute the
-    # (python-loop) Jaro-Winkler only where lev clears a safety margin
-    # below that threshold; elsewhere report NaN — "gated out", the same
-    # convention as the jaccard column; the scorer nulls it before
-    # persisting so the stored jw is never a fake 0.0 (cascade contract —
-    # see operators/scoring.py docstring). NaN fails every >= threshold
+    # the (python-loop) Jaro-Winkler only where lev clears JW_GATE_LEV;
+    # elsewhere report NaN — "gated out", the same convention as the
+    # jaccard column; the scorer nulls it before persisting so the
+    # stored jw is never a fake 0.0 (cascade contract — see
+    # operators/scoring.py docstring). NaN fails every >= threshold
     # comparison, so the is_dup rule is unaffected.
     jw_u = np.full(len(ua), np.nan, dtype=np.float64)
-    for i in np.flatnonzero(lev_u >= jw_gate_lev):
+    for i in np.flatnonzero(lev_u >= JW_GATE_LEV):
         jw_u[i] = jaro_winkler(ua[i], ub[i])
 
     # np.unique returns first_idx in unique-code order == code value order

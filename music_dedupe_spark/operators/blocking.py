@@ -51,6 +51,18 @@ from music_dedupe_spark.session import persist
 
 MERSENNE_PRIME = (1 << 61) - 1
 
+#: Default ``block_pairs`` cap of the exact-key and sorted-neighborhood
+#: channels (``PipelineConfig.block_cap``).
+BLOCK_CAP = 64
+
+#: MinHash signature length, LSH band count (r = NUM_PERM / BANDS = 4
+#: rows per band) and the permutation seed. A stored signature is exact
+#: only for the same (NUM_PERM, shingle_k, SEED), which is why the
+#: incremental signature store checks its signature length.
+NUM_PERM = 128
+BANDS = 32
+SEED = 1
+
 
 def _pairs_within(blocks: DataFrame, key_cols: list[str]) -> DataFrame:
     l = blocks.select(*key_cols, F.col("file_id").alias("left_id"))
@@ -94,7 +106,7 @@ def block_pairs(
 def exact_key_pairs(
     df: DataFrame,
     key_col: str = "norm_name",
-    cap: int = 64,
+    cap: int = BLOCK_CAP,
     channel: str = "exact_key",
 ) -> DataFrame:
     """Self-join on the exact blocking key, capped and salted at ``cap``
@@ -119,10 +131,10 @@ def content_sha_star(df: DataFrame, channel: str = "exact_content") -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, MERSENNE_PRIME, size=num_perm, dtype=np.uint64)
-    b = rng.randint(0, MERSENNE_PRIME, size=num_perm, dtype=np.uint64)
+def _minhash_params() -> tuple[np.ndarray, np.ndarray]:
+    rng = np.random.RandomState(SEED)
+    a = rng.randint(1, MERSENNE_PRIME, size=NUM_PERM, dtype=np.uint64)
+    b = rng.randint(0, MERSENNE_PRIME, size=NUM_PERM, dtype=np.uint64)
     return a, b
 
 
@@ -148,27 +160,25 @@ def _shingle_hashes(text: str, k: int) -> np.ndarray:
 
 def minhash_signatures(
     df: DataFrame,
-    num_perm: int = 128,
     shingle_k: int = 7,
-    seed: int = 1,
     content_col: str = "content",
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(file_id, *passthrough, sig: array<long>) — MinHash signature per
-    row, computed in Arrow batches with numpy (one (n_shingles x
-    num_perm) broadcasted min per row; no per-row Python in the Spark
-    plan). ``passthrough`` carries extra string columns (e.g.
+    """(file_id, *passthrough, sig: array<long>) — ``NUM_PERM``-long
+    MinHash signature per row, computed in Arrow batches with numpy (one
+    (n_shingles x NUM_PERM) broadcasted min per row; no per-row Python
+    in the Spark plan). ``passthrough`` carries extra string columns (e.g.
     content_sha256) through the kernel so callers can build a sha-keyed
     signature store as a pure projection — no join back, and crucially
     no shuffle of the content column."""
-    a, b = _minhash_params(num_perm, seed)
+    a, b = _minhash_params()
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # vectorize ACROSS documents: concatenate every doc's shingle
             # hashes and take segmented minima with minimum.reduceat —
             # one numpy dispatch per ~30k-shingle chunk instead of one
-            # (num_perm x n_shingles) matmul per document.
+            # (NUM_PERM x n_shingles) matmul per document.
             shingle_sets = [_shingle_hashes(t or "", shingle_k) for t in pdf[content_col]]
             sigs: list[list[int] | None] = [None] * len(shingle_sets)
             chunk_docs: list[int] = []
@@ -182,7 +192,7 @@ def minhash_signatures(
                 offsets = np.zeros(len(parts), dtype=np.int64)
                 np.cumsum([len(p) for p in parts[:-1]], out=offsets[1:])
                 flat = np.concatenate(parts)
-                # (num_perm, total) universal hash; segmented min per doc
+                # (NUM_PERM, total) universal hash; segmented min per doc
                 vals = (a[:, None] * flat[None, :] + b[:, None]) % MERSENNE_PRIME
                 mins = np.minimum.reduceat(vals, offsets, axis=1)
                 for k, i in enumerate(chunk_docs):
@@ -191,7 +201,7 @@ def minhash_signatures(
 
             for i, sh in enumerate(shingle_sets):
                 if len(sh) == 0:
-                    sigs[i] = [0] * num_perm
+                    sigs[i] = [0] * NUM_PERM
                     continue
                 chunk_docs.append(i)
                 chunk_size += len(sh)
@@ -218,16 +228,13 @@ def minhash_signatures(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    num_perm: int = 128,
-    bands: int = 32,
     shingle_k: int = 7,
-    seed: int = 1,
     band_cap: int = 200,
     channel: str = "minhash_lsh",
     sigs: DataFrame | None = None,
 ) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` bands of
-    ``num_perm/bands`` rows; hash each band to a bucket key; equal band
+    """LSH banding: split the signature into ``BANDS`` bands of
+    ``NUM_PERM/BANDS`` rows; hash each band to a bucket key; equal band
     keys propose a pair. With r=4, b=32 the s-curve crosses ~ (1/b)^(1/r)
     = 0.42 Jaccard — generous recall; precision comes from the scorer.
 
@@ -237,17 +244,16 @@ def minhash_lsh_pairs(
     ``sigs``: optional precomputed ``(file_id, sig)`` signatures (e.g.
     run_pipeline's signature store, or incremental_link's store-hit ∪
     delta-computed union) — signatures are deterministic per content for
-    fixed (num_perm, shingle_k, seed), so reusing them is exact. When
+    fixed (NUM_PERM, shingle_k, SEED), so reusing them is exact. When
     omitted they are computed from ``df``'s content column."""
-    assert num_perm % bands == 0
-    r = num_perm // bands
+    r = NUM_PERM // BANDS
     if sigs is None:
-        sigs = minhash_signatures(df, num_perm, shingle_k, seed)
+        sigs = minhash_signatures(df, shingle_k)
     banded = sigs.select(
         "file_id",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
                 lambda i: F.slice(F.col("sig"), i * r + 1, r),
             )
         ).alias("band_idx", "band_sig"),

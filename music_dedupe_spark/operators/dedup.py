@@ -342,8 +342,6 @@ def dedup_minhash_lsh(spark, sf):
         with cache_scope():
             cpairs = minhash_lsh_pairs(
                 canary_input,
-                num_perm=128,
-                bands=32,
                 shingle_k=5,
                 band_cap=2 * len(planted) + 1,
             )
@@ -395,8 +393,6 @@ def dedup_minhash_lsh(spark, sf):
                     F.col("doc_id").cast("string").alias("file_id"),
                     F.col("text").alias("content"),
                 ),
-                num_perm=128,
-                bands=32,
                 shingle_k=5,
             )
             out = (

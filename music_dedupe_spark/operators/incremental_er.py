@@ -125,28 +125,27 @@ def _not_same_entity(pairs: DataFrame, assignment: DataFrame) -> DataFrame:
 
 
 def _updated_sig_store(
-    pv_all: DataFrame, existing_signatures: DataFrame | None, cfg
+    pv_all: DataFrame, existing_signatures: DataFrame | None, checkpoint_dir: str | None
 ) -> tuple[DataFrame, int]:
     """The MinHash signature store over old ∪ new, hashing ONLY content
     ``existing_signatures`` does not cover (the delta, plus any old rows
     missing from a stale store); stored signatures are exact for fixed
-    (num_perm, shingle_k, seed). Returns the store and the number of
+    (NUM_PERM, shingle_k, SEED). Returns the store and the number of
     signatures computed. The delta's signatures are persisted and kept
     past the candidate stage's cache scope, unless a checkpoint dir
     compacts the store."""
     sig_store = existing_signatures
     if sig_store is not None:
-        # a store built under a different num_perm would join cleanly
+        # a store built with another signature length would join cleanly
         # and silently break LSH banding — check the one parameter the
         # data itself reveals (sig length) on a single row. shingle_k /
         # seed mismatches are not detectable from the data; the store
-        # contract is "produced by this engine with the same cfg".
+        # contract is "produced by this engine".
         probe = sig_store.select(F.size("sig").alias("_n")).limit(1).collect()
-        if probe and probe[0]["_n"] != cfg.minhash_num_perm:
+        if probe and probe[0]["_n"] != blocking.NUM_PERM:
             raise ValueError(
                 f"existing_signatures has {probe[0]['_n']}-perm signatures "
-                f"but cfg.minhash_num_perm={cfg.minhash_num_perm}; rebuild "
-                "the store or pass the matching config"
+                f"but this engine uses {blocking.NUM_PERM}; rebuild the store"
             )
     narrow = pv_all.select("file_id", "content_sha256")
     if sig_store is not None:
@@ -164,20 +163,14 @@ def _updated_sig_store(
     # DELTA, so this dropDuplicates moves only O(|new|) content — and
     # the sha rides through the kernel so the store is a projection
     reps = to_hash.dropDuplicates(["content_sha256"])
-    rep_sigs = blocking.minhash_signatures(
-        reps,
-        cfg.minhash_num_perm,
-        cfg.shingle_k,
-        seed=1,
-        passthrough=("content_sha256",),
-    )
+    rep_sigs = blocking.minhash_signatures(reps, passthrough=("content_sha256",))
     # the returned store reads it: it outlives the candidate stage
     delta_store = keep(persist(rep_sigs.select("content_sha256", "sig")))
     n_computed = delta_store.count()
     sig_store = (
         delta_store if sig_store is None else sig_store.unionByName(delta_store)
     )
-    if cfg.checkpoint_dir:
+    if checkpoint_dir:
         # COMPACT the store: chained delta runs would otherwise stack
         # one persisted delta + one union node per run — unbounded
         # lineage depth and pinned executor memory. Writing the union
@@ -204,11 +197,9 @@ def _updated_sig_store(
         from music_dedupe_spark import fsutil
 
         spark = pv_all.sparkSession
-        tmp = f"{cfg.checkpoint_dir}/.tmp_sig_store_{_uuid.uuid4().hex}"
+        tmp = f"{checkpoint_dir}/.tmp_sig_store_{_uuid.uuid4().hex}"
         sig_store.write.mode("overwrite").parquet(tmp)
-        path = fsutil.claim_versioned_dir(
-            spark, tmp, cfg.checkpoint_dir, "sig_store"
-        )
+        path = fsutil.claim_versioned_dir(spark, tmp, checkpoint_dir, "sig_store")
         sig_store = spark.read.parquet(path)
         delta_store.unpersist()
     return sig_store, n_computed
@@ -225,9 +216,9 @@ def incremental_link(
 
     Inputs: raw new files (repo, path, commit, lang, content); the
     existing ingested features table; the existing (member_id,
-    entity_id) assignment (e.g. the previous run's ``clusters``); and,
-    when ``cfg.use_lsh``, the previous run's ``minhash_sig_store``
-    — (content_sha256, sig) — so only the DELTA's content is hashed.
+    entity_id) assignment (e.g. the previous run's ``clusters``); and
+    the previous run's ``minhash_sig_store`` — (content_sha256, sig) —
+    so only the DELTA's content is hashed.
     Without a store the existing side's signatures are recomputed
     (correct, but O(corpus) — pass the store in production). With
     ``cfg.checkpoint_dir`` set, the updated store is COMPACTED to
@@ -274,7 +265,6 @@ def incremental_link(
     pv_new = pair_view(new_feats)
     pv_all = pair_view(all_feats)
 
-    sig_store = existing_signatures
     metrics: dict[str, int] = {}
     # the channels' own caches (banded LSH signatures, the neighborhood
     # pass) live until the candidate stage is materialized
@@ -295,7 +285,7 @@ def incremental_link(
         # new-touching pairs without losing full-run pairs). The pass itself
         # is narrow — (key, id) only, one range shuffle. ONE shared
         # implementation with the batch pipeline (pipeline.rungroup_channel)
-        # so gate/threshold/sizing can never drift between the two paths.
+        # so gate/sizing/cap can never drift between the two paths.
         # The gate size is the count of old ∪ new, as a full rerun would
         # take it; the count also materializes the all_feats persist.
         from music_dedupe_spark.pipeline import rungroup_channel
@@ -304,27 +294,20 @@ def incremental_link(
         if rg_pairs is not None:
             channels.append(_not_same_entity(rg_pairs, existing_assignment))
 
-        if cfg.use_lsh:
-            sig_store, metrics["n_signatures_computed"] = _updated_sig_store(
-                pv_all, existing_signatures, cfg
-            )
-            all_sigs = (
-                pv_all.select("file_id", "content_sha256")
-                .join(sig_store, "content_sha256")
-                .select("file_id", "sig")
-            )
-            lsh = blocking.minhash_lsh_pairs(
-                pv_all,
-                num_perm=cfg.minhash_num_perm,
-                bands=cfg.minhash_bands,
-                shingle_k=cfg.shingle_k,
-                sigs=all_sigs,
-            )
-            channels.append(_touching_new(lsh, pv_new))
+        sig_store, metrics["n_signatures_computed"] = _updated_sig_store(
+            pv_all, existing_signatures, cfg.checkpoint_dir
+        )
+        all_sigs = (
+            pv_all.select("file_id", "content_sha256")
+            .join(sig_store, "content_sha256")
+            .select("file_id", "sig")
+        )
+        lsh = blocking.minhash_lsh_pairs(pv_all, sigs=all_sigs)
+        channels.append(_touching_new(lsh, pv_new))
         candidate_pairs = keep(persist(blocking.union_channels(*channels)))
         candidate_pairs.count()
 
-    scored = persist(scoring.score_candidates(candidate_pairs, pv_all, cfg.scoring))
+    scored = persist(scoring.score_candidates(candidate_pairs, pv_all))
     delta_edges = scoring.matched_pairs(scored)
 
     # fold the existing resolution in via clustering.fold_incremental

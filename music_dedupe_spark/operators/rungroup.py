@@ -40,13 +40,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from music_dedupe_spark.functions.similarity import fuzz_ratio
+from music_dedupe_spark.functions.similarity import FUZZ_THRESHOLD, fuzz_ratio
 from music_dedupe_spark.session import cache_scope, keep, persist
 
-DEFAULT_THRESHOLD = 85  # fuzz.ratio > 85, /root/reference/app/core.py:697
+
+def _joins_group(head: str, key: str) -> bool:
+    """The reference's join rule: ``key`` joins the group opened by
+    ``head`` when ``fuzz.ratio > FUZZ_THRESHOLD``. Identical keys (the
+    dominant case: sorted hot keys form long equal runs) short-circuit on
+    string equality — fuzz_ratio(k, k) == 100 — so the DP is skipped."""
+    return key == head or fuzz_ratio(head, key) > FUZZ_THRESHOLD
 
 
-def rungroup_sequential(keys: list[str], threshold: int = DEFAULT_THRESHOLD) -> list[int]:
+def rungroup_sequential(keys: list[str]) -> list[int]:
     """The reference forward pass (core.py:687-706) verbatim over an
     already-sorted key sequence. Returns a group index per row. Used both
     inside the distributed operator (per partition) and as the test
@@ -56,18 +62,11 @@ def rungroup_sequential(keys: list[str], threshold: int = DEFAULT_THRESHOLD) -> 
     gids = [0]
     head = keys[0]
     gid = 0
-    # identical keys (the dominant case: sorted hot keys form long equal
-    # runs) short-circuit on string equality — fuzz_ratio(k, k) == 100,
-    # which passes any threshold < 100, so the DP dispatch is skipped.
-    # Valid only below 100: at threshold >= 100 even equal keys split.
-    eq_joins = threshold < 100
     for k in keys[1:]:
-        if (eq_joins and k == head) or fuzz_ratio(head, k) > threshold:
-            gids.append(gid)
-        else:
+        if not _joins_group(head, k):
             gid += 1
             head = k
-            gids.append(gid)
+        gids.append(gid)
     return gids
 
 
@@ -75,7 +74,6 @@ def sorted_run_groups(
     df: DataFrame,
     key_col: str = "norm_name",
     id_col: str = "file_id",
-    threshold: int = DEFAULT_THRESHOLD,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign run-group ids over the global key sort order — exact
@@ -122,14 +120,8 @@ def sorted_run_groups(
                         head, head_id = carry
                     started = True
                 heads = []
-                # equal-key short-circuit: sorted hot keys form long
-                # identical runs; string equality (fuzz == 100 > any
-                # threshold < 100) skips the O(len^2) DP for them
-                eq_joins = threshold < 100
                 for key, rid in zip(pdf["_key"], pdf["_id"]):
-                    if head is None or not (
-                        (eq_joins and key == head) or fuzz_ratio(head, key) > threshold
-                    ):
+                    if head is None or not _joins_group(head, key):
                         head, head_id = key, rid
                     heads.append(head_id)
                     n_rows += 1
@@ -197,7 +189,7 @@ def sorted_run_groups(
             # when its first row would JOIN the incoming open group; if no
             # boundary fuzzy-joins, this round is already the global pass.
             if rnd == 0 and not any(
-                fuzz_ratio(c[0], firsts[p]) > threshold for p, c in new_carries.items()
+                _joins_group(c[0], firsts[p]) for p, c in new_carries.items()
             ):
                 break
             carries = new_carries

@@ -25,29 +25,22 @@ The decision column is pure Catalyst ``when/otherwise`` on top.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from music_dedupe_spark.functions.similarity import FUZZ_THRESHOLD
 
-@dataclass(frozen=True)
-class ScoringConfig:
-    """Deterministic replacement of the reference's LLM verdict.
-
-    ``fuzz_threshold`` is the reference's `> 85` (core.py:697). A pair is
-    a duplicate when content is identical (sha equality — 'same song,
-    different extension'), or when the blocking keys fuzzy-match like the
-    reference AND the contents actually overlap (token Jaccard), which is
-    what the LLM verdict was approximating ('different songs sharing a
-    title -> NOT DUPLICATE')."""
-
-    fuzz_threshold: int = 85
-    min_token_jaccard: float = 0.5
-    min_jaro_winkler: float = 0.88
-    min_norm_lev: float = 0.86
-    high_jaccard: float = 0.9
-
+# Deterministic replacement of the reference's LLM verdict. A pair is a
+# duplicate when content is identical (sha equality — 'same song,
+# different extension'), or when the blocking keys fuzzy-match like the
+# reference (fuzz > FUZZ_THRESHOLD) AND the contents actually overlap
+# (token Jaccard), which is what the LLM verdict was approximating
+# ('different songs sharing a title -> NOT DUPLICATE'), or when the
+# contents nearly coincide under near-equal names.
+MIN_TOKEN_JACCARD = 0.5
+MIN_JARO_WINKLER = 0.88
+MIN_NORM_LEV = 0.86
+HIGH_JACCARD = 0.9
 
 #: Hex chars of the sha256 prefix the pair joins carry for the
 #: exact_content equality (16 hex = 8 bytes; see the collision math at
@@ -56,7 +49,7 @@ class ScoringConfig:
 SHA_PREFIX_HEX_CHARS = 16
 
 
-def duplicate_decision(cfg: ScoringConfig | None = None) -> Column:
+def duplicate_decision() -> Column:
     """THE duplicate decision rule — the single implementation, applied
     as a Catalyst predicate over the scored columns (fuzz_key, jw,
     norm_lev, jaccard, exact_content). The cascade's contract makes it
@@ -67,17 +60,16 @@ def duplicate_decision(cfg: ScoringConfig | None = None) -> Column:
     never a false positive from a never-computed score (NaN, by
     contrast, orders as the LARGEST double in Spark, which is why the
     kernel's NaN markers are normalized to NULL first)."""
-    cfg = cfg or ScoringConfig()
     return (
         F.col("exact_content")
         | (
-            (F.col("fuzz_key") > cfg.fuzz_threshold)
-            & (F.col("jaccard") >= cfg.min_token_jaccard)
+            (F.col("fuzz_key") > FUZZ_THRESHOLD)
+            & (F.col("jaccard") >= MIN_TOKEN_JACCARD)
         )
         | (
-            (F.col("jaccard") >= cfg.high_jaccard)
-            & (F.col("jw") >= cfg.min_jaro_winkler)
-            & (F.col("norm_lev") >= cfg.min_norm_lev)
+            (F.col("jaccard") >= HIGH_JACCARD)
+            & (F.col("jw") >= MIN_JARO_WINKLER)
+            & (F.col("norm_lev") >= MIN_NORM_LEV)
         )
     )
 
@@ -95,9 +87,7 @@ def _kernel_schema(id_type: str) -> str:
     )
 
 
-def score_candidates(
-    pairs: DataFrame, features: DataFrame, cfg: ScoringConfig | None = None
-) -> DataFrame:
+def score_candidates(pairs: DataFrame, features: DataFrame) -> DataFrame:
     """The cascade, tuned for minimum per-pair traffic on BOTH sides of
     the Arrow boundary (per-pair hash-join probes and Arrow transfer
     were the two measured non-scaling components at high core counts):
@@ -129,7 +119,6 @@ def score_candidates(
 
     from music_dedupe_spark.functions.similarity import name_scores_arrays
 
-    cfg = cfg or ScoringConfig()
     # --- join order is the bytes-per-pair optimization -------------------
     # The token-hash arrays are ~2 KB per side; shipping them for every
     # candidate pair would dominate Arrow traffic AND drag arrays
@@ -176,11 +165,12 @@ def score_candidates(
     th_l = features.select(
         F.col("file_id").alias("left_id"), F.col("token_hashes").alias("token_hashes_l")
     )
-    # containment bound derived from cfg so custom thresholds stay safe:
+    # containment bound derived from the thresholds (t = FUZZ_THRESHOLD,
+    # m = MIN_NORM_LEV):
     # fuzz > t      ==> round(100*(1-indel/lensum)) > t ==> raw >= t+0.5
     #               ==> lev <= indel <= (1-(t+0.5)/100) * lensum
     # norm_lev >= m ==> lev <= (1-m) * maxlen <= (1-m) * lensum
-    ship_frac = max(1.0 - (cfg.fuzz_threshold + 0.5) / 100.0, 1.0 - cfg.min_norm_lev)
+    ship_frac = max(1.0 - (FUZZ_THRESHOLD + 0.5) / 100.0, 1.0 - MIN_NORM_LEV)
     ship = (~F.col("exact_content")) & (
         F.levenshtein("norm_name_l", "norm_name_r")
         <= ship_frac * (F.length("norm_name_l") + F.length("norm_name_r"))
@@ -224,9 +214,6 @@ def score_candidates(
         )
     )
 
-    fuzz_th = cfg.fuzz_threshold
-    min_jw, min_lev = cfg.min_jaro_winkler, cfg.min_norm_lev
-
     def _list_views(arr: pa.Array):
         """Offsets + flat values of a list column as numpy views —
         survivors are sliced without materializing per-row arrays."""
@@ -251,11 +238,13 @@ def score_candidates(
             if ne.any():
                 av = np.asarray(rb.column(2).to_pylist(), dtype=object)[ne]
                 bv = np.asarray(rb.column(3).to_pylist(), dtype=object)[ne]
-                fuzz[ne], jw[ne], lev[ne] = name_scores_arrays(
-                    av, bv, jw_gate_lev=min(0.8, min_lev)
-                )
+                fuzz[ne], jw[ne], lev[ne] = name_scores_arrays(av, bv)
             exact = rb.column(4).to_numpy(zero_copy_only=False).astype(bool)
-            gate = exact | (fuzz > fuzz_th) | ((jw >= min_jw) & (lev >= min_lev))
+            gate = (
+                exact
+                | (fuzz > FUZZ_THRESHOLD)
+                | ((jw >= MIN_JARO_WINKLER) & (lev >= MIN_NORM_LEV))
+            )
             jac = np.full(rb.num_rows, np.nan)
             off_l, val_l = _list_views(rb.column(6))
             off_r, val_r = _list_views(rb.column(7))
@@ -330,9 +319,10 @@ def score_candidates(
             )
 
     scored = joined.mapInArrow(run, schema=_kernel_schema(dict(pairs.dtypes)["left_id"]))
-    # NaN marks "gated out" (jaccard: gate not passed; jw: cascade skipped
-    # it because norm_lev < 0.8); normalize to NULL (Spark orders NaN as
-    # the LARGEST double — a raw NaN would pass >= thresholds downstream).
+    # NaN marks "gated out" (jaccard: gate not passed; jw: cascade
+    # skipped it because norm_lev < JW_GATE_LEV); normalize to NULL
+    # (Spark orders NaN as the LARGEST double — a raw NaN would pass >=
+    # thresholds downstream).
     # is_dup is then Catalyst — the one decision-rule implementation.
     # Equivalence with the old in-kernel numpy rule: jaccard is non-NULL
     # only where the gate passed, so the explicit `gate &` factor is
@@ -341,7 +331,7 @@ def score_candidates(
     scored = scored.withColumn(
         "jaccard", F.when(F.isnan("jaccard"), F.lit(None)).otherwise(F.col("jaccard"))
     ).withColumn("jw", F.when(F.isnan("jw"), F.lit(None)).otherwise(F.col("jw")))
-    return scored.withColumn("is_dup", F.coalesce(duplicate_decision(cfg), F.lit(False)))
+    return scored.withColumn("is_dup", F.coalesce(duplicate_decision(), F.lit(False)))
 
 
 def matched_pairs(scored: DataFrame) -> DataFrame:

@@ -20,7 +20,7 @@ as the memory-bandwidth-bound stage.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,20 +31,18 @@ from music_dedupe_spark.functions.text import (
     with_derived_columns,
 )
 from music_dedupe_spark.operators import blocking, clustering, rungroup, scoring
-from music_dedupe_spark.operators.scoring import ScoringConfig
 from music_dedupe_spark.operators.survivorship import rank_survivors
 from music_dedupe_spark.session import cache_scope, keep, persist
 
 
 @dataclass
 class PipelineConfig:
-    scoring: ScoringConfig = field(default_factory=ScoringConfig)
-    block_cap: int = 64
-    rungroup_threshold: int = 85
-    use_lsh: bool = True
-    minhash_num_perm: int = 128
-    minhash_bands: int = 32
-    shingle_k: int = 7
+    """The settings a caller may change. Every other tunable is a named
+    constant beside the code it governs: ``similarity.FUZZ_THRESHOLD``,
+    the ``scoring`` thresholds, ``blocking.NUM_PERM`` / ``BANDS`` /
+    ``SEED``."""
+
+    block_cap: int = blocking.BLOCK_CAP
     checkpoint_dir: str | None = None
     resume: bool = False
     # assert that the 64-bit internal ids (fid = xxhash64(file_id)) are
@@ -151,8 +149,8 @@ def rungroup_channel(
     ONE implementation shared by the batch pipeline and
     incremental_link: the incremental's label-identical-to-full-rerun
     contract requires both paths to compute this channel with the same
-    gate, threshold, partition sizing, and group cap — a drift between
-    two copies would silently break the equality property.
+    gate, partition sizing, and group cap — a drift between two copies
+    would silently break the equality property.
 
     Sizing: ~50k rows per sequential partition pass (Python O(rows)
     per partition), clamped to the shuffle width.
@@ -161,12 +159,7 @@ def rungroup_channel(
         return None
     shuffle_n = int(features.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     rg_parts = min(shuffle_n, max(1, n_rows // 50_000 + 1))
-    rg = rungroup.sorted_run_groups(
-        features,
-        key_col="norm_name",
-        threshold=cfg.rungroup_threshold,
-        num_partitions=rg_parts,
-    )
+    rg = rungroup.sorted_run_groups(features, key_col="norm_name", num_partitions=rg_parts)
     # each run group is a block: all pairs up to the cap, a star to the
     # group's minimum id over it (one hot run of identical keys stays
     # linear, like every other channel's hot blocks)
@@ -183,7 +176,7 @@ def generate_candidates(
     """Union of the three blocking channels + the sorted-neighborhood
     run-group channel (J1). Output (left_id, right_id, channel).
     ``minhash_sigs``: optional precomputed (file_id, sig) signatures for
-    the LSH channel (run_pipeline passes its signature store).
+    the LSH channel (run_pipeline passes the signatures it stages).
     ``n_rows``: the row count of ``features``, which gates the
     sorted-neighborhood channel (run_pipeline passes the count it already
     took)."""
@@ -198,16 +191,7 @@ def generate_candidates(
     rg = rungroup_channel(features, cfg, n_rows)
     if rg is not None:
         channels.append(rg)
-    if cfg.use_lsh:
-        channels.append(
-            blocking.minhash_lsh_pairs(
-                features,
-                num_perm=cfg.minhash_num_perm,
-                bands=cfg.minhash_bands,
-                shingle_k=cfg.shingle_k,
-                sigs=minhash_sigs,
-            )
-        )
+    channels.append(blocking.minhash_lsh_pairs(features, sigs=minhash_sigs))
     return blocking.union_channels(*channels)
 
 
@@ -219,15 +203,13 @@ def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[st
     session when none is open); the blocking channels' caches are
     released once the candidate stage is materialized."""
     cfg = cfg or PipelineConfig()
-    features = ingest(files)
-    if cfg.checkpoint_dir:
-        _checkpoint(features, f"{cfg.checkpoint_dir}/stage0_features")
-        features = files.sparkSession.read.parquet(f"{cfg.checkpoint_dir}/stage0_features")
-    else:
-        # each downstream stage (4 blocking channels, scoring join, CC
-        # loop, survivorship) re-reads features: persist once
-        features = persist(features)
 
+    def at(name: str) -> str | None:
+        return f"{cfg.checkpoint_dir}/{name}" if cfg.checkpoint_dir else None
+
+    # each downstream stage (4 blocking channels, scoring join, CC loop,
+    # survivorship) re-reads features
+    features = _stage(ingest(files), at("stage0_features"))
     n_rows = features.count()  # also materializes the persist
     if cfg.check_fid_collisions:
         r = features.agg(
@@ -244,66 +226,39 @@ def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[st
     pv = pair_view(features)
 
     # MinHash signature store: signatures are deterministic per content
-    # for fixed (num_perm, shingle_k, seed), so they are computed ONCE
+    # (blocking.NUM_PERM / SEED, shingle_k 7), so they are computed ONCE
     # here, fed to the LSH channel, and returned keyed by content_sha256
     # — the table incremental_link reads so a delta run hashes only the
     # delta's content (O(|new|), not O(corpus); VERDICT r2 missing #3).
-    # ~1 KB/row (128 longs): parquet-checkpointed when a dir is given,
-    # else persisted alongside features.
-    sig_store = None
-    minhash_sigs = None
-    if cfg.use_lsh:
-        # the sha rides THROUGH the kernel (passthrough), so the store is
-        # a pure projection of the signature pass — no join back and no
-        # shuffle of the content column. dropDuplicates here moves only
-        # (sha, 1KB sig) rows.
-        sigs = blocking.minhash_signatures(
-            pv,
-            cfg.minhash_num_perm,
-            cfg.shingle_k,
-            seed=1,
-            passthrough=("content_sha256",),
-        )
-        if cfg.checkpoint_dir:
-            _checkpoint(sigs, f"{cfg.checkpoint_dir}/minhash_sigs")
-            sigs = files.sparkSession.read.parquet(f"{cfg.checkpoint_dir}/minhash_sigs")
-        else:
-            # consumed by both the LSH banding and the returned store;
-            # a run output like features, so the caller's store handle
-            # never re-runs the kernel
-            sigs = persist(sigs)
-        sig_store = sigs.select("content_sha256", "sig").dropDuplicates(
-            ["content_sha256"]
-        )
-        minhash_sigs = sigs.select("file_id", "sig")
+    # ~1 KB/row (128 longs), consumed by both the LSH banding and the
+    # returned store, so the caller's store handle never re-runs the
+    # kernel. The sha rides THROUGH the kernel (passthrough), so the
+    # store is a pure projection of the signature pass — no join back
+    # and no shuffle of the content column. dropDuplicates here moves
+    # only (sha, 1KB sig) rows.
+    sigs = _stage(
+        blocking.minhash_signatures(pv, passthrough=("content_sha256",)),
+        at("minhash_sigs"),
+    )
+    sig_store = sigs.select("content_sha256", "sig").dropDuplicates(["content_sha256"])
 
     # the channels' own caches (banded LSH signatures, the neighborhood
     # pass) live until the candidate stage is materialized
     with cache_scope():
-        candidate_pairs = generate_candidates(
-            pv, cfg, minhash_sigs=minhash_sigs, n_rows=n_rows
+        candidates = generate_candidates(
+            pv, cfg, minhash_sigs=sigs.select("file_id", "sig"), n_rows=n_rows
         )
-        if cfg.checkpoint_dir:
-            _checkpoint(candidate_pairs, f"{cfg.checkpoint_dir}/stage1_candidates")
-            candidate_pairs = files.sparkSession.read.parquet(
-                f"{cfg.checkpoint_dir}/stage1_candidates"
-            )
-        else:
-            candidate_pairs = keep(persist(candidate_pairs))
+        candidate_pairs = keep(_stage(candidates, at("stage1_candidates")))
+        if not cfg.checkpoint_dir:  # a checkpoint write already ran it
             candidate_pairs.count()
 
-    scored = scoring.score_candidates(candidate_pairs, pv, cfg.scoring)
-    if cfg.checkpoint_dir:
-        _checkpoint(scored, f"{cfg.checkpoint_dir}/stage2_scored")
-        scored = files.sparkSession.read.parquet(f"{cfg.checkpoint_dir}/stage2_scored")
-    else:
-        scored = persist(scored)
+    scored = _stage(scoring.score_candidates(candidate_pairs, pv), at("stage2_scored"))
 
     matched = persist(scoring.matched_pairs(scored))
     assignment = public_assignment(
         clustering.connected_components(
             matched,
-            checkpoint_dir=f"{cfg.checkpoint_dir}/cc" if cfg.checkpoint_dir else None,
+            checkpoint_dir=at("cc"),
             resume=cfg.resume,
         ),
         features,
@@ -333,15 +288,21 @@ def run_pipeline(files: DataFrame, cfg: PipelineConfig | None = None) -> dict[st
         "matched_pairs": public_pairs(matched, features),
         "clusters": all_assign,
         "ranked": ranked,
-        # (content_sha256, sig) — None when use_lsh=False; feed this to
+        # (content_sha256, sig); feed this to
         # incremental_link(existing_signatures=...) so delta runs skip
         # re-hashing the existing corpus
         "minhash_sig_store": sig_store,
     }
 
 
-def _checkpoint(df: DataFrame, path: str) -> None:
+def _stage(df: DataFrame, path: str | None) -> DataFrame:
+    """Commit one ``run_pipeline`` stage: with a checkpoint ``path``,
+    overwrite it as parquet and read it back; without one, persist
+    ``df`` in the innermost cache scope."""
+    if path is None:
+        return persist(df)
     df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
 
 
 # ---------------------------------------------------------------------------

@@ -39,7 +39,6 @@ def _host_driver_mem() -> str:
     return f"{max(1, int(mem_kb * DRIVER_HEAP_SHARE / 1024 / 1024))}g"
 
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
@@ -56,7 +55,7 @@ def get_spark(
     ``local[N]``. All settings below are cluster-safe.
     """
     cpus = str(cpus or DEFAULT_CPUS)
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    shuffle_partitions = shuffle_partitions or cpus
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)

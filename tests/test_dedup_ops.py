@@ -169,8 +169,6 @@ def test_lsh_canaries_side_effect_free_on_hot_buckets(spark, tmp_path):
                 F.col("doc_id").cast("string").alias("file_id"),
                 F.col("text").alias("content"),
             ),
-            num_perm=128,
-            bands=32,
             shingle_k=5,
         )
         want = {

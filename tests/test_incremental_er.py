@@ -7,7 +7,8 @@ from pyspark.sql import functions as F
 
 from music_dedupe_spark.fixtures import generate_corpus, write_corpus
 from music_dedupe_spark.operators.incremental_er import incremental_link
-from music_dedupe_spark.pipeline import PipelineConfig, pairwise_f1, run_pipeline
+from music_dedupe_spark.pipeline import PipelineConfig, ingest, pairwise_f1, run_pipeline
+from music_dedupe_spark.session import cache_scope
 
 
 @pytest.fixture(scope="module")
@@ -179,17 +180,37 @@ def test_delta_rungroup_emits_regrouped_old_pair(spark):
         [("r", f"src/{_C}.py", "c1", "py", "content new bridge")],
         "repo string, path string, commit string, lang string, content string",
     )
-    base = run_pipeline(old_files, PipelineConfig(use_lsh=False))
+    base = run_pipeline(old_files, PipelineConfig())
     inc = incremental_link(
-        new_files, base["features"], base["clusters"], PipelineConfig(use_lsh=False)
+        new_files, base["features"], base["clusters"], PipelineConfig(),
+        existing_signatures=base["minhash_sig_store"],
     )
     feats = {r["norm_name"]: r["file_id"] for r in base["features"].collect()}
     d_id, e_id = feats[_D], feats[_E]
     pair = tuple(sorted([d_id, e_id]))
     got = {
-        (r["left_id"], r["right_id"])
-        for r in inc["candidate_pairs"].select("left_id", "right_id").collect()
+        (r["left_id"], r["right_id"]): r["channel"]
+        for r in inc["candidate_pairs"].collect()
     }
     assert pair in got, (
         "regrouped old×old neighborhood pair missing from the delta candidates"
     )
+    # the only channel that keeps old×old pairs: LSH keeps new-touching ones
+    assert got[pair] == "sorted_neighborhood"
+
+
+def test_signature_store_of_another_length_is_rejected(spark):
+    """A store of 64-long signatures joins cleanly but would break the
+    128-row LSH banding silently; incremental_link refuses it."""
+    schema = "repo string, path string, commit string, lang string, content string"
+    old = spark.createDataFrame([("r", "src/a.py", "c0", "py", "old content")], schema)
+    new = spark.createDataFrame([("r", "src/b.py", "c1", "py", "new content")], schema)
+    feats = ingest(old)
+    assignment = feats.select(
+        F.col("file_id").alias("member_id"), F.col("file_id").alias("entity_id")
+    )
+    store = spark.createDataFrame(
+        [("0" * 64, [0] * 64)], "content_sha256 string, sig array<long>"
+    )
+    with cache_scope(), pytest.raises(ValueError, match="64-perm"):
+        incremental_link(new, feats, assignment, existing_signatures=store)

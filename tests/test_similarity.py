@@ -12,7 +12,6 @@ import pytest
 
 from music_dedupe_spark.functions.similarity import (
     fuzz_ratio,
-    fuzz_ratio_series,
     indel_distance,
     jaro,
     jaro_winkler,
@@ -85,14 +84,6 @@ def test_token_set_jaccard():
     assert token_set_jaccard(["a", "a", "b"], ["b", "a"]) == 1.0  # set semantics
 
 
-def test_series_kernels_dedup_path():
-    a = pd.Series(["main", "main", "utils", None])
-    b = pd.Series(["main", "mian", "utils", "x"])
-    out = fuzz_ratio_series(a, b)
-    assert list(out) == [100, 75, 100, 0]
-    assert str(out.dtype) == "int32"
-
-
 def test_name_scores_frame_parity():
     from music_dedupe_spark.functions.similarity import name_scores_frame
 
@@ -105,7 +96,12 @@ def test_name_scores_frame_parity():
     B = [rs() for _ in range(800)]
     A += A[:100] + ["", "", "same"]  # dup pairs + empties + identical
     B += B[:100] + ["", "x", "same"]
+    # a repeated pair and a None key (scored as "")
+    A += ["main", "main", "main", "utils", None]
+    B += ["main", "mian", "mian", "utils", "x"]
     out = name_scores_frame(pd.Series(A), pd.Series(B))
+    assert str(out["fuzz_key"].dtype) == "int32"
+    assert list(out["fuzz_key"].iloc[-5:]) == [100, 75, 75, 100, 0]
     for i, (x, y) in enumerate(zip(A, B)):
         assert out["fuzz_key"].iloc[i] == fuzz_ratio(x, y), (x, y)
         lev = norm_levenshtein(x, y)
