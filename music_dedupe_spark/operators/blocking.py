@@ -226,12 +226,45 @@ def minhash_signatures(
     )
 
 
+def lsh_bands(sigs: DataFrame, new_col: str | None = None) -> DataFrame:
+    """``(file_id, _bk)``: one row per signature band, ``_bk`` = band
+    index + hash of the band's ``NUM_PERM/BANDS`` values.
+
+    ``new_col``: optional boolean column of ``sigs`` marking the delta's
+    rows. When given, only the bands whose key some new row carries are
+    kept — a broadcast semi-join on the new rows' keys (the join needs
+    no ``distinct``), i.e. a map-side filter over the stored signatures.
+    Whole buckets stay, so a kept bucket pairs exactly as in a full run,
+    and every dropped bucket holds old rows only."""
+    r = NUM_PERM // BANDS
+    flag = [new_col] if new_col else []
+    banded = sigs.select(
+        "file_id",
+        *flag,
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
+                lambda i: F.slice(F.col("sig"), i * r + 1, r),
+            )
+        ).alias("band_idx", "band_sig"),
+    ).select(
+        "file_id",
+        *flag,
+        F.concat_ws("_", F.col("band_idx"), F.hash(F.col("band_sig"))).alias("_bk"),
+    )
+    if new_col:
+        touched = banded.filter(F.col(new_col)).select("_bk")
+        banded = banded.join(F.broadcast(touched), "_bk", "left_semi")
+    return banded.select("file_id", "_bk")
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     shingle_k: int = 7,
     band_cap: int = 200,
     channel: str = "minhash_lsh",
     sigs: DataFrame | None = None,
+    new_col: str | None = None,
 ) -> DataFrame:
     """LSH banding: split the signature into ``BANDS`` bands of
     ``NUM_PERM/BANDS`` rows; hash each band to a bucket key; equal band
@@ -245,30 +278,21 @@ def minhash_lsh_pairs(
     run_pipeline's signature store, or incremental_link's store-hit ∪
     delta-computed union) — signatures are deterministic per content for
     fixed (NUM_PERM, shingle_k, SEED), so reusing them is exact. When
-    omitted they are computed from ``df``'s content column."""
-    r = NUM_PERM // BANDS
+    omitted they are computed from ``df``'s content column.
+
+    ``new_col``: a boolean column of ``sigs`` marking new rows; only the
+    buckets a new row touches are paired (``lsh_bands``), so a delta
+    shuffles O(|new| · band_cap) band rows instead of the corpus."""
     if sigs is None:
         sigs = minhash_signatures(df, shingle_k)
-    banded = sigs.select(
-        "file_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(BANDS - 1)),
-                lambda i: F.slice(F.col("sig"), i * r + 1, r),
-            )
-        ).alias("band_idx", "band_sig"),
-    ).select(
-        "file_id",
-        F.concat_ws("_", F.col("band_idx"), F.hash(F.col("band_sig"))).alias("_bk"),
-    )
-    # block_pairs reads `banded` once per branch (block count, all-pairs,
-    # star), and its lineage contains the EXPENSIVE minhash mapInPandas —
+    # block_pairs reads the bands once per branch (block count, all-pairs,
+    # star), and their lineage contains the EXPENSIVE minhash mapInPandas —
     # without a persist the signatures are computed once per branch
     # (measured +40% on the whole query). MEMORY_AND_DISK: at 10^12 rows
     # this is n*bands small rows and spills gracefully. The cache belongs
     # to the caller's cache_scope: run_pipeline and incremental_link
     # release it once the candidate stage is materialized.
-    cached = persist(banded)
+    cached = persist(lsh_bands(sigs, new_col))
     # a pair sharing several bands is proposed once per band
     return block_pairs(cached, band_cap, channel).dropDuplicates(["left_id", "right_id"])
 

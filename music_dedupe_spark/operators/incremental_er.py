@@ -19,7 +19,13 @@ Candidate generation only pairs ``new × (new ∪ existing)``:
   channel itself (``blocking.block_pairs`` underneath) run over the
   pruned rows, followed by one new-touching filter: a single pass with
   two broadcast left joins on the new id set, no union and no extra
-  shuffle. The sorted-neighborhood channel is the exception: group
+  shuffle. For LSH the keys are band keys (``minhash_lsh_pairs`` with
+  ``new_col``): only the buckets a new row touches reach block_pairs'
+  shuffles, and the O(corpus) work left is a map-side scan of the
+  stored signatures (their sha join onto the corpus ids, banding and
+  the semi-join probe), with no shuffle while one side of the sha join
+  broadcasts; above that size the join shuffles the stored signatures
+  once. The sorted-neighborhood channel is the exception: group
   heads depend on the global key order, so each delta re-runs the
   (narrow, two-column) range-sort pass over the full old ∪ new corpus —
   one O(corpus) narrow shuffle per delta, gated by
@@ -52,7 +58,9 @@ these per-channel arguments:
   keeping the re-scored volume near the delta's neighborhood.
 - MinHash-LSH: signatures are deterministic per content and read from
   the ``existing_signatures`` store (only the delta's content is
-  hashed — O(|new|), the VERDICT r2 gap); kept pairs are new-touching.
+  hashed — O(|new|), the VERDICT r2 gap); the pass bands the buckets a
+  new row touches, whole, so the new-touching pairs it keeps are
+  exactly a full pass's.
   Bucket membership of old rows is unchanged, EXCEPT the same cap
   corner as exact-key (a bucket crossing band_cap flips old×old pairs
   from all-pairs to star sampling).
@@ -297,12 +305,15 @@ def incremental_link(
         sig_store, metrics["n_signatures_computed"] = _updated_sig_store(
             pv_all, existing_signatures, cfg.checkpoint_dir
         )
+        # only the buckets a new row touches are banded and paired: the
+        # pruning keeps whole buckets, so _touching_new sees exactly the
+        # new-touching pairs of a full-corpus LSH pass
         all_sigs = (
-            pv_all.select("file_id", "content_sha256")
+            pv_all.select("file_id", "content_sha256", "_is_new")
             .join(sig_store, "content_sha256")
-            .select("file_id", "sig")
+            .select("file_id", "sig", "_is_new")
         )
-        lsh = blocking.minhash_lsh_pairs(pv_all, sigs=all_sigs)
+        lsh = blocking.minhash_lsh_pairs(pv_all, sigs=all_sigs, new_col="_is_new")
         channels.append(_touching_new(lsh, pv_new))
         candidate_pairs = keep(persist(blocking.union_channels(*channels)))
         candidate_pairs.count()

@@ -6,9 +6,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from music_dedupe_spark.fixtures import generate_corpus, write_corpus
-from music_dedupe_spark.operators.incremental_er import incremental_link
-from music_dedupe_spark.pipeline import PipelineConfig, ingest, pairwise_f1, run_pipeline
-from music_dedupe_spark.session import cache_scope
+from music_dedupe_spark.operators import blocking
+from music_dedupe_spark.operators.incremental_er import _touching_new, incremental_link
+from music_dedupe_spark.pipeline import (
+    PipelineConfig,
+    ingest,
+    pair_view,
+    pairwise_f1,
+    run_pipeline,
+)
+from music_dedupe_spark.session import cache_scope, persist
 
 
 @pytest.fixture(scope="module")
@@ -214,3 +221,37 @@ def test_signature_store_of_another_length_is_rejected(spark):
     )
     with cache_scope(), pytest.raises(ValueError, match="64-perm"):
         incremental_link(new, feats, assignment, existing_signatures=store)
+
+
+@pytest.mark.parametrize("band_cap", [2, 200])
+def test_pruned_delta_lsh_keeps_every_new_touching_pair(
+    spark, files_df, tmp_path, band_cap
+):
+    """The delta's LSH pass bands only the buckets a new row touches; it
+    keeps whole buckets, so its new-touching pairs are exactly those of
+    a pass over the whole corpus — also at band_cap 2, where touched
+    buckets go over the cap and pair as stars — from fewer band rows."""
+    generate_corpus(seed=43, n_base=60, n_clusters=15).files.to_parquet(
+        f"{tmp_path}/delta.parquet", index=False
+    )
+    pv_new = pair_view(ingest(spark.read.parquet(f"{tmp_path}/delta.parquet")))
+    pv_all = pair_view(ingest(files_df)).withColumn("_is_new", F.lit(False)).unionByName(
+        pv_new.withColumn("_is_new", F.lit(True))
+    )
+    with cache_scope():
+        sigs = persist(
+            blocking.minhash_signatures(pv_all).join(
+                pv_all.select("file_id", "_is_new"), "file_id"
+            )
+        )
+
+        def pairs(**kw):
+            lsh = blocking.minhash_lsh_pairs(pv_all, band_cap=band_cap, sigs=sigs, **kw)
+            return {tuple(r) for r in _touching_new(lsh, pv_new).collect()}
+
+        full = pairs()
+        assert full and pairs(new_col="_is_new") == full
+        touched = blocking.lsh_bands(sigs, "_is_new")
+        assert touched.count() < blocking.lsh_bands(sigs).count()
+        if band_cap == 2:  # the touched buckets do go over the cap
+            assert touched.groupBy("_bk").count().filter("count > 2").count() > 0

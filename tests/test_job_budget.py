@@ -1,5 +1,6 @@
 """Job budget: the number of Spark jobs and queries each engine stage
-submits on the seed-42 fixture may not grow.
+submits on the seed-42 fixture, and the shuffle bytes it writes, may not
+grow.
 
 A refactor that adds a stray action (a ``.count()`` to materialize
 something, a ``collect`` to inspect it) keeps every output the same and
@@ -13,8 +14,13 @@ Queries count the same on every run. Jobs do too, except in a query
 that runs many AQE query stages at once, where the number of stage jobs
 moves between runs on the same input: the one query of exact_key_pairs
 (13-14 jobs) and of minhash_lsh_pairs (15-16), and the candidate query
-of incremental_link (125-126 jobs in all). Their jobs are not bounded;
+of incremental_link (127-128 jobs in all). Their jobs are not bounded;
 their queries are.
+
+A plan that sends a wide column (the content, the 1 KB MinHash arrays)
+through an exchange no operator reads it after keeps every output and
+every count the same; only the shuffle bytes show it, so the calls that
+move those columns also have a byte ceiling.
 """
 
 import uuid
@@ -41,6 +47,7 @@ JOB_CEILINGS = {
     "content_sha_star": 4,
     "rungroup_channel": 9,
     "run_pipeline": 81,
+    "survivorship": 4,
     "connected_components": 28,
 }
 
@@ -51,19 +58,33 @@ QUERY_CEILINGS = {
     "rungroup_channel": 2,
     "minhash_lsh_pairs": 1,
     "run_pipeline": 10,
+    "survivorship": 1,
     "incremental_link": 14,
     "connected_components": 7,
 }
 
+#: Shuffle MB written per call: the largest of three runs at local[4]
+#: plus 25%. The bytes move with the shuffle width, not between runs:
+#: local[2] writes up to 7% less, local[8] up to 11% more.
+SHUFFLE_CEILINGS_MB = {
+    "run_pipeline": 1.10,
+    "survivorship": 0.026,
+    "incremental_link": 0.99,
+}
 
-def count_jobs(spark, fn) -> tuple[int, int]:
-    """``(jobs, queries)`` that ``fn()`` submits on this thread. ``fn``
-    runs under its own job group, and the listener bus is drained before
-    the group's jobs are counted. ``queries`` counts the SQL executions
-    that ran any of those jobs, and each job run outside an execution."""
+
+def count_jobs(spark, fn) -> tuple[int, int, float]:
+    """``(jobs, queries, shuffle MB)`` that ``fn()`` submits on this
+    thread. ``fn`` runs under its own job group, and the listener bus is
+    drained before the group's jobs are counted. ``queries`` counts the
+    SQL executions that ran any of those jobs, and each job run outside
+    an execution; the shuffle MB sum the bytes written by the stages of
+    those jobs that did not exist before ``fn`` ran (a reused shuffle
+    belongs to the call that wrote it)."""
     sc = spark.sparkContext
     sql = spark._jsparkSession.sharedState().statusStore()
     before = _execution_ids(sql)
+    stages_before = set(_stage_shuffle_bytes(sc))
     group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
@@ -83,7 +104,33 @@ def count_jobs(spark, fn) -> tuple[int, int]:
         if ran:
             queries.add(e.rootExecutionId())
             in_queries |= ran
-    return len(jobs), len(queries) + len(jobs - in_queries)
+    status = sc._jsc.sc().statusStore()
+    stage_ids = set()
+    for j in jobs:
+        seq = status.job(j).stageIds()
+        stage_ids |= {seq.apply(i) for i in range(seq.size())}
+    shuffle = sum(
+        b
+        for (sid, attempt), b in _stage_shuffle_bytes(sc).items()
+        if sid in stage_ids and (sid, attempt) not in stages_before
+    )
+    return len(jobs), len(queries) + len(jobs - in_queries), shuffle / 1e6
+
+
+def _stage_shuffle_bytes(sc) -> dict[tuple[int, int], int]:
+    """Shuffle bytes written per ``(stage id, attempt)`` in Spark's
+    status store."""
+    jvm = sc._jvm
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    )
+    out = {}
+    it = stages.iterator()
+    while it.hasNext():
+        s = it.next()
+        out[(s.stageId(), s.attemptId())] = s.shuffleWriteBytes()
+    return out
 
 
 def _execution_ids(sql) -> set[int]:
@@ -91,9 +138,10 @@ def _execution_ids(sql) -> set[int]:
     return {executions.apply(i).executionId() for i in range(executions.size())}
 
 
-def measure(spark, files_df, delta_df) -> dict[str, tuple[int, int]]:
-    """``(jobs, queries)`` per call: each blocking channel over the
-    persisted internal-id features, then run_pipeline + clusters.count(),
+def measure(spark, files_df, delta_df) -> dict[str, tuple[int, int, float]]:
+    """``(jobs, queries, shuffle MB)`` per call: each blocking channel
+    over the persisted internal-id features, then run_pipeline +
+    clusters.count(), its ranked survivors written to a ``noop`` sink,
     incremental_link of ``delta_df`` onto that run, and
     connected_components over its matched pairs. Every block releases its
     caches before the next one starts."""
@@ -129,6 +177,10 @@ def measure(spark, files_df, delta_df) -> dict[str, tuple[int, int]]:
             inc["clusters"].count()
 
         counts["run_pipeline"] = count_jobs(spark, run)
+        counts["survivorship"] = count_jobs(
+            spark,
+            lambda: out["ranked"].write.format("noop").mode("overwrite").save(),
+        )
         counts["incremental_link"] = count_jobs(spark, link)
         edges = out["matched_pairs"].select("left_id", "right_id").localCheckpoint()
         counts["connected_components"] = count_jobs(
@@ -150,6 +202,7 @@ def job_counts(spark, files_df, tmp_path_factory):
 
 @pytest.mark.parametrize("call", list(QUERY_CEILINGS))
 def test_job_budget(job_counts, call):
-    jobs, queries = job_counts[call]
+    jobs, queries, shuffle_mb = job_counts[call]
     assert queries <= QUERY_CEILINGS[call], (call, queries)
     assert jobs <= JOB_CEILINGS.get(call, jobs), (call, jobs)
+    assert shuffle_mb <= SHUFFLE_CEILINGS_MB.get(call, shuffle_mb), (call, shuffle_mb)

@@ -218,3 +218,30 @@ def test_touching_new_adds_no_exchange(spark, files_df):
         assert len(exchanges(_touching_new(pairs, new))) == len(exchanges(pairs))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_survivorship_ranks_a_narrow_frame(spark, files_df):
+    """Survivorship windows ``(file_id, quality, size_chars, entity_id)``
+    and joins the ranks back onto the features: with broadcast disabled,
+    the ``entity_id`` exchange carries no content, and exactly one
+    exchange of the ``ranked`` plan does — the join back. Windowing the
+    full feature rows put the content through two exchanges."""
+    import re
+
+    from music_dedupe_spark.pipeline import PipelineConfig, run_pipeline
+    from music_dedupe_spark.plans.checks import exchanges
+    from music_dedupe_spark.session import cache_scope
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        with cache_scope():
+            exs = exchanges(run_pipeline(files_df, PipelineConfig())["ranked"])
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    by_entity = [
+        e for e in exs if re.match(r"hashpartitioning\(entity_id#\d+, \d+\)", e["args"])
+    ]
+    assert by_entity and not any("content" in e["cols"] for e in by_entity), by_entity
+    wide = [e for e in exs if "content" in e["cols"]]
+    assert len(wide) == 1 and "file_id" in wide[0]["args"], wide
